@@ -64,12 +64,6 @@ def test_resize(spark, imgs):
         assert img.shape == (8, 8, 3)
 
 
-def test_video_stub_raises(spark):
-    df = spark.createDataFrame(pd.DataFrame({"media_id": ["v1"], "bytes": [b"\x00\x01"]}))
-    with pytest.raises(Exception, match="NotImplementedError|ffmpeg"):
-        iops.sample_video_frames(df).collect()
-
-
 def test_audio_pcm_features(spark):
     t = np.arange(16000)
     wave = (np.sin(2 * np.pi * 440 * t / 16000) * 10000).astype(np.int16)

@@ -37,7 +37,7 @@ def test_point_features_nondefault_extent(spark):
 
 def test_float_metadata_survives_decode_encode_roundtrip(spark):
     """VAL_FLOAT (tag 2) properties must survive decode_tiles -> encode_tiles
-    (was: silently dropped by _meta_to_dict)."""
+    (was: silently dropped by the struct-metadata converter)."""
     feat = codec.Feature(1, {"f32": (codec.VAL_FLOAT, 1.5)}, 1, np.array([[7, 7]]))
     mvt = codec.encode_tile([codec.Layer("ext", features=[feat])])
     tiles = spark.createDataFrame(
@@ -122,25 +122,6 @@ def test_knn_dateline_distance(spark):
     rows = knn_join(queries, candidates, k=1, z=5, ring=1).collect()
     assert rows[0].cand_id == 10  # the wrapped neighbor, 0.2 degrees away
     assert rows[0].dist2 == pytest.approx(0.04, rel=1e-6)
-
-
-def test_grouped_encoder_accepts_canonical_features(spark):
-    """encode_tiles_grouped must consume point_features output (geom_pt +
-    plain meta columns), matching the stream encoder byte-for-byte."""
-    imgs = images_df(spark, 150, seed=9)
-    feats = tiling.point_features(
-        imgs, z=5, layer="im", feature_id=F.xxhash64("image_id"),
-        meta={"caption": F.col("caption"), "phash": F.col("phash")},
-    )
-    grouped = {
-        (r.tile_x, r.tile_y): codec.roundtrip_features(bytes(r.mvt))
-        for r in tiling.encode_tiles_grouped(feats).collect()
-    }
-    stream = {
-        (r.tile_x, r.tile_y): codec.roundtrip_features(bytes(r.mvt))
-        for r in tiling.encode_tiles(feats).collect()
-    }
-    assert grouped == stream
 
 
 def test_single_layer_guard_rejects_union_and_nulls(spark):

@@ -521,10 +521,10 @@ def encode_layer_from_streams(
     """Layer wire encode from (feature_id, metadata, geom_type, command_stream)
     tuples whose geometry is ALREADY a uint32 command stream.
 
-    This is the hot path called per tile inside the Spark applyInPandas sink
-    (SURVEY.md §2.D8): upstream stages produce command streams (points via
-    pure Column math, polygons/lines via the NumPy kernel), so the per-tile
-    work left here is dictionary building + wire framing.
+    The scalar layer encoder behind encode_tile, and the oracle the batch
+    kernel (encode_multi_tile_batch, the encode_tiles sink) is tested
+    against: per feature it builds the dictionaries and frames the wire
+    bytes in Python.
 
     Contract per the reference: dictionaries layer-level (totalMeta,
     Internal.hs:321-329; first-appearance order where the reference's
@@ -539,7 +539,7 @@ def encode_layer_from_streams(
     def _vkey(tv: tuple) -> tuple:
         # dedupe by BIT PATTERN for floats: Python's 0.0 == -0.0 would
         # fold two distinct wire values into one slot (and diverge from
-        # the columnar paths' bitwise Arrow dictionaries)
+        # the batch kernel's bitwise dictionaries)
         tag, v = tv
         return (tag, struct.pack("<d", v)) if isinstance(v, float) else tv
 
@@ -578,190 +578,6 @@ def encode_layer_from_streams(
     return body
 
 
-def encode_layer_columnar(
-    name: str,
-    fids,
-    gts,
-    streams,
-    meta_cols: list[tuple[str, np.ndarray, np.ndarray, np.ndarray]],
-    version: int = 2,
-    extent: int = DEFAULT_EXTENT,
-) -> bytes:
-    """Columnar layer encode: metadata arrives as per-column dictionary
-    CODES (dictionary-encoded once per Arrow batch upstream) plus fully
-    FRAMED value wire bytes (frame_values_vec) — the per-tile work is
-    np.unique over small int arrays and byte slicing, no per-feature dict
-    churn and no Python per value.
-
-    meta_cols: [(key, codes_int64_for_this_tile, framed_buf, framed_off)]
-    with code -1 meaning NULL (feature lacks the key). Keys dictionary =
-    column order; values dictionary = first-appearance of local uniques.
-    Features are emitted points-first/lines/polys (Internal.hs:123-125) via
-    a stable sort on geom_type.
-    """
-    n = len(fids)
-    order = np.argsort(np.asarray(gts), kind="stable")
-    tag_lists: list[list[int]] = [[] for _ in range(n)]
-    val_parts: list[bytes] = []
-    n_vals = 0
-    emit_order = order.tolist()
-    for k_idx, (key, codes, fbuf, foff) in enumerate(meta_cols):
-        # dictionary in first-appearance order over the EMITTED feature
-        # order (tile-local; matches the vectorized paths byte-for-byte)
-        base_of: dict[int, int] = {}
-        codes_list = codes.tolist()
-        for i in emit_order:
-            c = codes_list[i]
-            if c >= 0 and c not in base_of:
-                base_of[c] = n_vals
-                n_vals += 1
-                val_parts.append(fbuf[foff[c]:foff[c + 1]].tobytes())
-        for i in range(n):
-            c = codes_list[i]
-            if c >= 0:
-                tag_lists[i].append(k_idx)
-                tag_lists[i].append(base_of[c])
-    body = wire.len_delimited(1, name.encode("utf-8"))
-    parts = [body]
-    for i in order.tolist():
-        parts.append(
-            _encode_feature(
-                int(fids[i]),
-                np.asarray(tag_lists[i], dtype=np.uint32),
-                int(gts[i]),
-                np.asarray(streams[i], dtype=np.uint32),
-            )
-        )
-    for key, _, _, _ in meta_cols:
-        parts.append(wire.len_delimited(3, key.encode("utf-8")))
-    parts.extend(val_parts)
-    parts.append(wire.tag_bytes(5, wire.WT_VARINT) + wire.encode_varint(int(extent)))
-    parts.append(wire.tag_bytes(15, wire.WT_VARINT) + wire.encode_varint(int(version)))
-    return b"".join(parts)
-
-
-def encode_layer_columnar_vec(
-    name: str,
-    fids: np.ndarray,
-    gts: np.ndarray,
-    geom_values: np.ndarray,
-    geom_offsets: np.ndarray,
-    meta_cols: list[tuple[str, np.ndarray, np.ndarray, np.ndarray]],
-    version: int = 2,
-    extent: int = DEFAULT_EXTENT,
-) -> bytes:
-    """Fully vectorized layer encode — zero Python work per feature.
-
-    The hot-tile path: a metro tile with 10^5+ features encodes via ~30
-    NumPy array passes (varint-encode all values at once, then ragged
-    scatter/gather to interleave the per-feature wire segments) instead of
-    a 10^5-iteration Python loop. Wire layout identical to
-    encode_layer_from_streams / the reference contract.
-
-    geom_values/geom_offsets: Arrow-style flattened command streams —
-    feature i's stream is geom_values[geom_offsets[i]:geom_offsets[i+1]].
-    meta_cols codes must be all >= 0 (no nulls) — caller falls back to the
-    scalar path otherwise.
-    """
-    n = len(fids)
-    fids = np.asarray(fids, dtype=np.int64)
-    gts = np.asarray(gts, dtype=np.int64)
-    geom_offsets = np.asarray(geom_offsets, dtype=np.int64)
-    glens = geom_offsets[1:] - geom_offsets[:-1]
-
-    # order: points first, then linestrings, then polygons (stable);
-    # single-geom-type runs (the hot-tile norm) skip reordering entirely
-    already_sorted = bool((gts[1:] >= gts[:-1]).all()) if n > 1 else True
-    order = None if already_sorted else np.argsort(gts, kind="stable")
-    if order is not None:
-        fids = fids[order]
-        gts_o = gts[order]
-    else:
-        gts_o = gts
-
-    # geometry: varint-encode the whole flat stream once, slice per feature
-    gbuf_all, gvlens = wire.encode_varints_with_lens(
-        np.asarray(geom_values, dtype=np.uint32).astype(np.uint64)
-    )
-    # per-feature geometry BYTE lengths in original order
-    byte_cum = np.concatenate([[0], np.cumsum(gvlens)])
-    gb_byte_start = byte_cum[geom_offsets[:-1]]
-    gb_byte_len = byte_cum[geom_offsets[1:]] - gb_byte_start
-    if order is not None:
-        gb_byte_start = gb_byte_start[order]
-        gb_byte_len = gb_byte_len[order]
-    gb_byte_len_o = gb_byte_len
-    geom_bytes = wire.ragged_gather(gbuf_all, gb_byte_start, gb_byte_len)
-
-    # metadata tags: (n, 2C) interleaved [key_idx, value_idx] matrix
-    val_chunks: list[np.ndarray] = []
-    n_vals = 0
-    C = len(meta_cols)
-    if C:
-        tag_mat = np.empty((n, 2 * C), dtype=np.uint64)
-        for k_idx, (key, codes, fbuf, foff) in enumerate(meta_cols):
-            codes = np.asarray(codes) if order is None else np.asarray(codes)[order]
-            n_dict = len(foff) - 1
-            # per-tile dictionary in FIRST-APPEARANCE order over the emitted
-            # feature order — a tile-LOCAL canonical order, so tile bytes
-            # cannot depend on Arrow batch boundaries (batch-level code
-            # order varies with partitioning). O(n + n_dict) via the
-            # reverse-assignment trick: last write wins, so writing
-            # positions in reverse leaves each slot's FIRST occurrence.
-            pos = np.full(n_dict, -1, dtype=np.int64)
-            pos[codes[::-1]] = np.arange(codes.size - 1, -1, -1, dtype=np.int64)
-            present = np.flatnonzero(pos >= 0)
-            uniq = present[np.argsort(pos[present], kind="stable")]
-            rank = np.empty(n_dict, dtype=np.int64)
-            rank[uniq] = np.arange(uniq.size)
-            inv = rank[codes]
-            base = n_vals
-            n_vals += len(uniq)
-            # ragged-gather the framed value bytes in dictionary order
-            val_chunks.append(wire.ragged_gather(fbuf, foff[uniq], foff[uniq + 1] - foff[uniq]))
-            tag_mat[:, 2 * k_idx] = k_idx
-            tag_mat[:, 2 * k_idx + 1] = base + inv
-        tbuf, tvlens = wire.encode_varints_with_lens(tag_mat.ravel())
-        tag_byte_lens = tvlens.reshape(n, 2 * C).sum(axis=1)
-    else:
-        tbuf = np.zeros(0, dtype=np.uint8)
-        tag_byte_lens = np.zeros(n, dtype=np.int64)
-
-    ones = np.ones(n, dtype=np.int64)
-
-    def const_slot(byte):
-        return np.full(n, byte, dtype=np.uint8), ones
-
-    fid_buf, fid_lens = wire.encode_varints_with_lens(fids.astype(np.uint64))
-    tlen_buf, tlen_lens = wire.encode_varints_with_lens(tag_byte_lens.astype(np.uint64))
-    glen_buf, glen_lens = wire.encode_varints_with_lens(gb_byte_len_o.astype(np.uint64))
-    gt_buf = gts_o.astype(np.uint8)  # 1..3, single byte
-
-    slots = [
-        (const_slot(0x08)), (fid_buf, fid_lens),                    # id
-    ]
-    if C:
-        slots += [(const_slot(0x12)), (tlen_buf, tlen_lens), (tbuf, tag_byte_lens)]  # tags packed
-    slots += [
-        (const_slot(0x18)), (gt_buf, ones),                         # type
-        (const_slot(0x22)), (glen_buf, glen_lens), (geom_bytes, gb_byte_len_o),  # geometry packed
-    ]
-    body_buf, body_lens = wire.ragged_stitch(slots)
-    blen_buf, blen_lens = wire.encode_varints_with_lens(body_lens.astype(np.uint64))
-    feat_buf, _ = wire.ragged_stitch(
-        [(const_slot(0x12)), (blen_buf, blen_lens), (body_buf, body_lens)]
-    )
-
-    parts = [wire.len_delimited(1, name.encode("utf-8")), feat_buf.tobytes()]
-    for key, _, _, _ in meta_cols:
-        parts.append(wire.len_delimited(3, key.encode("utf-8")))
-    for chunk in val_chunks:
-        parts.append(chunk.tobytes())
-    parts.append(wire.tag_bytes(5, wire.WT_VARINT) + wire.encode_varint(int(extent)))
-    parts.append(wire.tag_bytes(15, wire.WT_VARINT) + wire.encode_varint(int(version)))
-    return b"".join(parts)
-
-
 def encode_multi_tile_batch(
     tz: np.ndarray,
     tx: np.ndarray,
@@ -781,14 +597,21 @@ def encode_multi_tile_batch(
     This is the scatter-tile answer: a batch with 50k one-feature ocean
     tiles costs ~20 NumPy array passes total, not 50k per-tile calls. Rows
     must arrive sorted by (tile, layer, geom_type, feature_id), all
-    geometries non-empty, all metadata codes non-null.
+    geometries non-empty.
+
+    meta_cols: [(key, codes, framed_buf, framed_off)] — per-row dictionary
+    codes into fully framed Layer.values entries (frame_values_vec). Code
+    -1 is NULL: the feature carries no tag for that key, and each (tile,
+    layer) run lists only the keys some feature of the run uses, in
+    column order (totalMeta, Internal.hs:321-329). Columns without NULLs
+    skip every mask, so a NULL-free batch pays one min() per column.
 
     Per-run (tile, layer) value dictionaries are built vectorized with the
     run-keyed-unique trick: unique(run_id * K + code) yields every run's
     code set, a per-run permutation reorders each segment to
-    FIRST-APPEARANCE order (the tile-local canonical order every encode
-    path uses), and rank/searchsorted recover each row's local index — so
-    tile bytes are identical across paths AND across Arrow batch layouts.
+    FIRST-APPEARANCE order (a tile-local canonical order), and
+    rank/searchsorted recover each row's local index — so tile bytes
+    cannot depend on Arrow batch layouts.
 
     Returns (list_of_mvt_bytes_per_tile, tile_starts_rows, n_runs_per_tile)
     aligned with the unique tiles in row order.
@@ -812,38 +635,66 @@ def encode_multi_tile_batch(
 
     # ---- metadata: per-run dictionaries, vectorized ----
     C = len(meta_cols)
-    run_val_bytes: list[np.ndarray] = []   # per column: concatenated per-run dicts
-    run_val_lens = np.zeros(n_runs, dtype=np.int64)
+    # per column: None when NULL-free, else the row mask of non-NULL codes
+    valid = [
+        None if np.min(codes, initial=0) >= 0 else np.asarray(codes) >= 0
+        for _, codes, _, _ in meta_cols
+    ]
+    has_null = any(ok is not None for ok in valid)
+    used = np.ones((n_runs, C), dtype=bool) if has_null else None  # keys each run lists
+    val_slots: list[tuple[np.ndarray, np.ndarray]] = []  # per column, per run
     cnt_prev = np.zeros(n_runs, dtype=np.int64)  # per-run value-dict base
     if C:
         tag_mat = np.empty((n, 2 * C), dtype=np.uint64)
-        for k_idx, (key, codes, fbuf, foff) in enumerate(meta_cols):
+        for k_idx, ((key, codes, fbuf, foff), ok) in enumerate(zip(meta_cols, valid)):
+            r = rid if ok is None else rid[ok]
+            c = codes if ok is None else codes[ok]
             K = np.int64(len(foff) - 1)
-            rkey = rid * (K + 1) + codes
+            rkey = r * (K + 1) + c
             u, first_idx, inv_u = np.unique(rkey, return_index=True, return_inverse=True)
             # first position of each run inside u
             run_first = np.searchsorted(u, rid[run_starts] * (K + 1))
             # reorder each run's dictionary segment to FIRST-APPEARANCE
-            # order (tile-local canonical — identical to the per-tile
-            # paths, independent of the batch-level code assignment);
+            # order (independent of the batch-level code assignment);
             # lexsort keeps segments contiguous per run, so run_first
             # offsets stay valid for the permuted order
             run_of_u = (u // (K + 1)).astype(np.int64)
             perm = np.lexsort((first_idx, run_of_u))
             rank = np.empty(len(u), dtype=np.int64)
             rank[perm] = np.arange(len(u))
-            local = rank[inv_u] - run_first[rid]
-            tag_mat[:, 2 * k_idx] = k_idx
-            tag_mat[:, 2 * k_idx + 1] = (cnt_prev[rid] + local).astype(np.uint64)
+            local = rank[inv_u] - run_first[r]
+            vidx = (cnt_prev[r] + local).astype(np.uint64)
             # per-run unique counts
             run_cnt = np.concatenate([run_first[1:], [len(u)]]) - run_first
+            if ok is None:
+                tag_mat[:, 2 * k_idx + 1] = vidx
+            else:
+                tag_mat[ok, 2 * k_idx + 1] = vidx
+                used[:, k_idx] = run_cnt > 0
             cnt_prev = cnt_prev + run_cnt
-            # gather framed value bytes of u's codes (per-run dict blocks)
+            # framed value bytes of u's codes (per-run dict blocks) and
+            # each run's byte length of this column's block
             ucodes = (u[perm] % (K + 1)).astype(np.int64)
-            vb = wire.ragged_gather(fbuf, foff[ucodes], foff[ucodes + 1] - foff[ucodes])
-            run_val_bytes.append((vb, ucodes, run_first))
-        tbuf, tvlens = wire.encode_varints_with_lens(tag_mat.ravel())
-        tag_lens = tvlens.reshape(n, 2 * C).sum(axis=1)
+            entry_lens = foff[ucodes + 1] - foff[ucodes]
+            vb = wire.ragged_gather(fbuf, foff[ucodes], entry_lens)
+            ecum = np.concatenate([[0], np.cumsum(entry_lens)])
+            val_slots.append((vb, ecum[run_first + run_cnt] - ecum[run_first]))
+        if has_null:
+            # a key's index is its rank among the keys its run lists, and
+            # NULL codes drop their (key, value) pair from the packed tags
+            tag_mat[:, 0::2] = (np.cumsum(used, axis=1) - used)[rid]
+            pair_ok = np.repeat(
+                np.stack([np.ones(n, bool) if ok is None else ok for ok in valid], axis=1),
+                2, axis=1,
+            ).ravel()
+            tbuf, tvlens = wire.encode_varints_with_lens(tag_mat.ravel()[pair_ok])
+            pair_lens = np.zeros(pair_ok.size, dtype=np.int64)
+            pair_lens[pair_ok] = tvlens
+            tag_lens = pair_lens.reshape(n, 2 * C).sum(axis=1)
+        else:
+            tag_mat[:, 0::2] = np.arange(C, dtype=np.uint64)
+            tbuf, tvlens = wire.encode_varints_with_lens(tag_mat.ravel())
+            tag_lens = tvlens.reshape(n, 2 * C).sum(axis=1)
     else:
         tbuf = np.zeros(0, dtype=np.uint8)
         tag_lens = np.zeros(n, dtype=np.int64)
@@ -851,11 +702,18 @@ def encode_multi_tile_batch(
     # ---- feature framing (whole batch) ----
     ones = np.ones(n, dtype=np.int64)
     fid_buf, fid_lens = wire.encode_varints_with_lens(np.asarray(fids, np.int64).astype(np.uint64))
-    tlen_buf, tlen_lens = wire.encode_varints_with_lens(tag_lens.astype(np.uint64))
     glen_buf, glen_lens = wire.encode_varints_with_lens(gb_len.astype(np.uint64))
     slots = [(np.full(n, 0x08, np.uint8), ones), (fid_buf, fid_lens)]
     if C:
-        slots += [(np.full(n, 0x12, np.uint8), ones), (tlen_buf, tlen_lens), (tbuf, tag_lens)]
+        hdr, hdr_lens = np.full(n, 0x12, np.uint8), ones
+        tlen_buf, tlen_lens = wire.encode_varints_with_lens(tag_lens.astype(np.uint64))
+        if has_null:
+            # a feature whose every code is NULL omits the tags field:
+            # drop its header byte and its one-byte varint(0) length
+            tagged = tag_lens > 0
+            hdr, hdr_lens = hdr[tagged], tagged.astype(np.int64)
+            tlen_buf, tlen_lens = tlen_buf[np.repeat(tagged, tlen_lens)], tlen_lens * tagged
+        slots += [(hdr, hdr_lens), (tlen_buf, tlen_lens), (tbuf, tag_lens)]
     slots += [
         (np.full(n, 0x18, np.uint8), ones), (np.asarray(gts, np.int64).astype(np.uint8), ones),
         (np.full(n, 0x22, np.uint8), ones), (glen_buf, glen_lens), (gbuf, gb_len),
@@ -867,62 +725,38 @@ def encode_multi_tile_batch(
     )
 
     # ---- per-run layer messages, stitched across ALL runs ----
-    # constant-per-layer-name blocks: name field + keys block + tail
-    # keys/extent/version framing is name-invariant: build once, reuse
-    keys_block = np.frombuffer(
-        b"".join(
-            wire.len_delimited(3, key.encode("utf-8")) for key, _, _, _ in meta_cols
-        ),
-        np.uint8,
+    run_lcode = lcodes[run_starts]
+    name_frames = [np.frombuffer(wire.len_delimited(1, nm.encode("utf-8")), np.uint8) for nm in lnames]
+    name_lens = np.array([f.size for f in name_frames], dtype=np.int64)
+    head_lens = name_lens[run_lcode]
+    head_cat = wire.ragged_gather(
+        np.concatenate(name_frames), (np.cumsum(name_lens) - name_lens)[run_lcode], head_lens
     )
+    key_frames = [np.frombuffer(wire.len_delimited(3, key.encode("utf-8")), np.uint8) for key, _, _, _ in meta_cols]
+    if has_null:
+        keys_cat, keys_lens = wire.ragged_stitch(
+            [(np.tile(kf, int(used[:, k].sum())), used[:, k] * kf.size) for k, kf in enumerate(key_frames)]
+        )
+    else:
+        keys_block = np.concatenate(key_frames) if C else np.zeros(0, np.uint8)
+        keys_cat = np.tile(keys_block, n_runs)
+        keys_lens = np.full(n_runs, keys_block.size, dtype=np.int64)
     tail = np.frombuffer(
         wire.tag_bytes(5, wire.WT_VARINT) + wire.encode_varint(int(extent))
         + wire.tag_bytes(15, wire.WT_VARINT) + wire.encode_varint(int(version)),
         np.uint8,
     )
-    name_blocks = [
-        (
-            np.frombuffer(wire.len_delimited(1, nm.encode("utf-8")), np.uint8),
-            keys_block,
-            tail,
-        )
-        for nm in lnames
-    ]
-    run_lcode = lcodes[run_starts]
-    head_lens = np.array([len(b[0]) for b in name_blocks], dtype=np.int64)[run_lcode]
-    keys_lens = np.array([len(b[1]) for b in name_blocks], dtype=np.int64)[run_lcode]
-    tail_lens = np.array([len(b[2]) for b in name_blocks], dtype=np.int64)[run_lcode]
-    head_cat = (
-        np.concatenate([name_blocks[c][0] for c in run_lcode.tolist()])
-        if n_runs else np.zeros(0, np.uint8)
-    )
-    keys_cat = (
-        np.concatenate([name_blocks[c][1] for c in run_lcode.tolist()])
-        if n_runs else np.zeros(0, np.uint8)
-    )
-    tail_cat = (
-        np.concatenate([name_blocks[c][2] for c in run_lcode.tolist()])
-        if n_runs else np.zeros(0, np.uint8)
-    )
     # per-run feature-bytes length
     run_feat_lens = np.add.reduceat(feat_lens, run_starts)
     # per-run value-dict bytes: interleave each column's per-run blocks
     if C:
-        val_slots = []
-        for vb, ucodes, run_first in run_val_bytes:
-            # per-run byte length of this column's dict block
-            _, _, fbuf_, foff_ = meta_cols[len(val_slots)]
-            entry_lens = foff_[ucodes + 1] - foff_[ucodes]
-            ecum = np.concatenate([[0], np.cumsum(entry_lens)])
-            col_run_lens = ecum[np.concatenate([run_first[1:], [len(ucodes)]])] - ecum[run_first]
-            val_slots.append((vb, col_run_lens))
         vals_cat, run_val_lens = wire.ragged_stitch(val_slots)
     else:
-        vals_cat = np.zeros(0, np.uint8)
+        vals_cat, run_val_lens = np.zeros(0, np.uint8), np.zeros(n_runs, dtype=np.int64)
 
-    # field order matches the per-tile paths exactly — name, features,
-    # KEYS, values, extent, version — so a tile's bytes cannot depend on
-    # which encode path its Arrow batch happened to route through
+    # field order name, features, KEYS, values, extent, version — the
+    # order encode_layer_from_streams writes (…/Tile/Layer.hs:51-55)
+    tail_lens = np.full(n_runs, tail.size, dtype=np.int64)
     layer_body_lens = head_lens + run_feat_lens + keys_lens + run_val_lens + tail_lens
     llen_buf, llen_lens = wire.encode_varints_with_lens(layer_body_lens.astype(np.uint64))
     run_ones = np.ones(n_runs, dtype=np.int64)
@@ -934,7 +768,7 @@ def encode_multi_tile_batch(
             (feat_buf, run_feat_lens),
             (keys_cat, keys_lens),
             (vals_cat, run_val_lens),
-            (tail_cat, tail_lens),
+            (np.tile(tail, n_runs), tail_lens),
         ]
     )
 
@@ -950,8 +784,8 @@ def encode_multi_tile_batch(
 
 
 def encode_value_bytes(tag: int, v) -> bytes:
-    """Wire bytes of one Value message body (used to pre-encode dictionary
-    uniques once per Arrow batch in the columnar path)."""
+    """Wire bytes of one Value message body (overzoom pre-encodes its
+    dictionary uniques with it)."""
     return _encode_value(tag, v)
 
 
@@ -984,17 +818,22 @@ def frame_values_vec(tag: int, arr) -> tuple[np.ndarray, np.ndarray]:
         msg, msg_lens = wire.ragged_stitch(
             [(np.full(n, 0x0A, np.uint8), ones), (lbuf, llens), (sbytes, lens)]
         )
-    elif tag == VAL_INT:
+    elif tag in (VAL_INT, VAL_UINT, VAL_SINT):
         vals = arr.to_numpy(zero_copy_only=False).astype(np.int64)
+        if tag == VAL_SINT:
+            vals = (vals << 1) ^ (vals >> 63)  # zigzag
         vbuf, vlens = wire.encode_varints_with_lens(vals.astype(np.uint64))
         msg, msg_lens = wire.ragged_stitch(
-            [(np.full(n, 0x20, np.uint8), ones), (vbuf, vlens)]
+            [(np.full(n, tag << 3, np.uint8), ones), (vbuf, vlens)]
         )
-    elif tag == VAL_DOUBLE:
-        vals = arr.to_numpy(zero_copy_only=False).astype(np.float64)
-        raw = vals.view(np.uint8).reshape(n, 8).ravel() if n else np.zeros(0, np.uint8)
+    elif tag in (VAL_FLOAT, VAL_DOUBLE):
+        # fixed32 float / fixed64 double, little-endian
+        dtype, hdr = (np.float32, 0x15) if tag == VAL_FLOAT else (np.float64, 0x19)
+        vals = arr.to_numpy(zero_copy_only=False).astype(np.float64).astype(dtype)
+        width = vals.itemsize
+        raw = vals.view(np.uint8).ravel() if n else np.zeros(0, np.uint8)
         msg, msg_lens = wire.ragged_stitch(
-            [(np.full(n, 0x19, np.uint8), ones), (raw, np.full(n, 8, np.int64))]
+            [(np.full(n, hdr, np.uint8), ones), (raw, np.full(n, width, np.int64))]
         )
     elif tag == VAL_BOOL:
         vals = arr.to_numpy(zero_copy_only=False).astype(np.uint8)

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from ..mvt import codec
 from ..mvt.geometry import GEOM_LINESTRING, GEOM_POINT, GEOM_POLYGON
+from ..session import python_stage_partitions
 from .clip import _ring_signed_area
 from .tiling import TILE_SCHEMA
 
@@ -200,13 +201,7 @@ def downzoom_tiles(tiles: DataFrame, levels: int = 1) -> DataFrame:
     # 4096-tile input). repartition on the SAME parent-key expressions the
     # groupBy uses, so applyInPandas' clustering requirement is satisfied
     # by this exchange and no second one is inserted.
-    import os
-
-    sc = tiles.sparkSession.sparkContext
-    parts = sc.defaultParallelism
-    ncpu = os.cpu_count() or parts
-    if sc.master.startswith("local[") and parts >= ncpu:
-        parts = max(1, ncpu // 2)
+    parts = python_stage_partitions(tiles.sparkSession)
     pz = (F.col("tile_z") - levels).alias("_pz")
     px = F.shiftright("tile_x", levels).alias("_px")
     py = F.shiftright("tile_y", levels).alias("_py")

@@ -3,10 +3,9 @@
 Images travel as opaque BINARY columns with typed metadata (w, h, fmt);
 every pixel-touching step is a vectorized batch UDF over ``mapInArrow`` —
 never per-row Python in the plan. The PPM/DCT codecs are real pure-NumPy
-implementations (images/codec.py); formats needing external libraries
-(JPEG/PNG, audio, video) are STUBBED with the full Spark plumbing (schema,
-batching, partitioning) in place, per the engine charter — the container
-has no PIL/ffmpeg.
+implementations (images/codec.py). Audio is read as raw PCM16; formats
+needing external decoders (JPEG/PNG, compressed audio, video) are not
+supported.
 """
 
 from __future__ import annotations
@@ -189,30 +188,6 @@ def resize_images(images: DataFrame, size: int = 16, out_fmt: str = "ppm") -> Da
     return images.select("image_id", "bytes", "fmt").mapInArrow(
         run, "image_id string, bytes binary, w int, h int, fmt string, ok boolean"
     )
-
-
-# ---------------- stubbed modalities (no codec libs in this container) ----------------
-
-FRAME_SCHEMA = "media_id string, frame_idx int, ts_ms long, frame binary"
-
-
-def sample_video_frames(videos: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame sampling: Spark plumbing is real (schema, Arrow batching,
-    per-partition decode), the codec is STUBBED — no ffmpeg/pyav in this
-    container. Swap `_decode_frames` for a real decoder in production."""
-
-    def _decode_frames(media_id: str, raw: bytes, every_ms: int):
-        raise NotImplementedError(
-            "video decode requires ffmpeg/pyav, not present in this container; "
-            "the Spark plumbing (schema, batching) is real — plug a decoder here"
-        )
-
-    def run(batches):
-        for b in batches:
-            for mid, raw in zip(b["media_id"].to_pylist(), b["bytes"].to_pylist()):
-                yield from _decode_frames(mid, raw, every_ms)
-
-    return videos.select("media_id", "bytes").mapInArrow(run, FRAME_SCHEMA)
 
 
 AUDIO_FEATURES_SCHEMA = (

@@ -1,21 +1,27 @@
 """Tile assembly: feature rows -> one MVT byte blob per (z, x, y).
 
-The flagship sink (SURVEY.md §2.D8, north_star): a
-``groupBy(tile_z, tile_x, tile_y).applyInPandas(encode)`` stage whose
-emitted tiles roundtrip-decode to exactly the features that went in,
-using the reference's MVT semantics (zigzag delta commands, layer/feature/
-value protobuf layout — Internal.hs:114-125 + SURVEY.md §1.3).
+The flagship sink (SURVEY.md §2.D8, north_star): ``encode_tiles``
+hash-partitions feature rows on the tile key, sorts each partition by
+(tile, layer, geom_type, feature_id) and stream-encodes it with
+``mapInArrow``; emitted tiles roundtrip-decode to exactly the features that
+went in, using the reference's MVT semantics (zigzag delta commands,
+layer/feature/value protobuf layout — Internal.hs:114-125 + SURVEY.md
+§1.3).
 
 Scale design:
 * Geometry is encoded to uint32 command streams UPSTREAM of the shuffle —
   for point features with pure Column math (JVM-side, whole-stage codegen),
-  for lines/polygons with the NumPy kernel inside vectorized UDFs. The
-  per-tile Python stage only does dictionary builds + wire framing.
+  for lines/polygons with the NumPy kernel inside vectorized UDFs.
+* The sink has ONE encode lane: every Arrow batch of complete tiles goes
+  through a single codec.encode_multi_tile_batch call (dictionary builds +
+  wire framing for all its tiles in a fixed number of array passes).
+  Metadata rides as plain typed columns or as an ARRAY<STRUCT> ``meta``
+  column; both become the kernel's columnar specs once per batch.
 * Hot tiles (dense metros) are bounded with a deterministic per-tile
   feature cap (rank window) BEFORE the shuffle — the same strategy
   planet-scale tilers use — so no task can receive an unbounded group.
-* The shuffle key is (tile_z, tile_x, tile_y); AQE coalesces the long tail
-  of tiny ocean tiles.
+* The encode exchange's partition count is pinned
+  (session.python_stage_partitions): the stage is Python-CPU bound.
 
 Feature-row schema (the engine's canonical feature exchange format):
     tile_z INT, tile_x INT, tile_y INT, layer STRING, geom_type INT,
@@ -32,6 +38,7 @@ from pyspark.sql import functions as F
 
 from ..functions.tiles import tile_px, tile_py, tile_x, tile_y, zigzag
 from ..mvt import codec
+from ..session import python_stage_partitions
 
 TILE_SCHEMA = "tile_z int, tile_x int, tile_y int, mvt binary, n_features long, n_layers int"
 
@@ -42,38 +49,6 @@ FEATURE_SCHEMA = (
 )
 
 
-def meta_string(key: str, col) -> object:
-    return F.struct(
-        F.lit(key).alias("key"), F.lit(codec.VAL_STRING).alias("tag"),
-        col.cast("string").alias("s"), F.lit(None).cast("double").alias("d"),
-        F.lit(None).cast("bigint").alias("i"), F.lit(None).cast("boolean").alias("b"),
-    )
-
-
-def meta_double(key: str, col) -> object:
-    return F.struct(
-        F.lit(key).alias("key"), F.lit(codec.VAL_DOUBLE).alias("tag"),
-        F.lit(None).cast("string").alias("s"), col.cast("double").alias("d"),
-        F.lit(None).cast("bigint").alias("i"), F.lit(None).cast("boolean").alias("b"),
-    )
-
-
-def meta_int(key: str, col) -> object:
-    return F.struct(
-        F.lit(key).alias("key"), F.lit(codec.VAL_INT).alias("tag"),
-        F.lit(None).cast("string").alias("s"), F.lit(None).cast("double").alias("d"),
-        col.cast("bigint").alias("i"), F.lit(None).cast("boolean").alias("b"),
-    )
-
-
-def meta_bool(key: str, col) -> object:
-    return F.struct(
-        F.lit(key).alias("key"), F.lit(codec.VAL_BOOL).alias("tag"),
-        F.lit(None).cast("string").alias("s"), F.lit(None).cast("double").alias("d"),
-        F.lit(None).cast("bigint").alias("i"), col.cast("boolean").alias("b"),
-    )
-
-
 def point_features(
     df: DataFrame,
     z: int,
@@ -81,7 +56,7 @@ def point_features(
     lon: str = "lon",
     lat: str = "lat",
     feature_id=None,
-    meta: list | None = None,
+    meta: dict | None = None,
     extent: int = codec.DEFAULT_EXTENT,
 ) -> DataFrame:
     """Rows with lon/lat -> canonical point-feature rows, all JVM-side.
@@ -120,12 +95,10 @@ def point_features(
         fid.cast("bigint").alias("feature_id"),
         geom_col,
     ]
-    if isinstance(meta, dict):
-        # plain typed columns -> columnar fast path in the encoder (the
-        # metadata stays Arrow-columnar through shuffle + dictionary build)
+    if meta:
+        # plain typed columns: the metadata stays Arrow-columnar through the
+        # shuffle and the encoder's per-batch dictionary build
         cols += [col.alias(key) for key, col in meta.items()]
-    elif meta:
-        cols.append(F.array(*meta).alias("meta"))
     return df.select(*cols)
 
 
@@ -416,109 +389,6 @@ def cap_tile_bytes(
     )
 
 
-def _meta_to_dict(meta) -> dict:
-    out = {}
-    if meta is None:
-        return out
-    for m in meta:
-        tag = m["tag"]
-        if tag == codec.VAL_STRING:
-            out[m["key"]] = (tag, m["s"])
-        elif tag in (codec.VAL_DOUBLE, codec.VAL_FLOAT):
-            out[m["key"]] = (tag, float(m["d"]))
-        elif tag in (codec.VAL_INT, codec.VAL_UINT, codec.VAL_SINT):
-            out[m["key"]] = (tag, int(m["i"]))
-        elif tag == codec.VAL_BOOL:
-            out[m["key"]] = (tag, bool(m["b"]))
-    return out
-
-
-def _encode_tile_group_arrow(tbl, extent: int = codec.DEFAULT_EXTENT):
-    """One Arrow batch = one tile's features -> one (z, x, y, mvt) row.
-
-    Arrow in/out (``applyInArrow``) rather than pandas: nullable BIGINT
-    struct fields survive exactly (pandas coerces them to float64, which
-    corrupts 64-bit ints like phash beyond 2^53), and the conversion is
-    cheaper — no pandas block consolidation per group. Accepts the same
-    feature shapes as the stream encoder (geom_pt or geom_cmds, struct
-    'meta' or plain typed metadata columns).
-    """
-    import pyarrow as pa
-
-    from ..mvt import wire
-
-    n = tbl.num_rows
-    z = tbl["tile_z"][0].as_py()
-    x = tbl["tile_x"][0].as_py()
-    y = tbl["tile_y"][0].as_py()
-    layers_col = tbl["layer"].to_pylist()
-    fids = tbl["feature_id"].to_pylist()
-    gts = tbl["geom_type"].to_pylist()
-    if "geom_pt" in tbl.column_names:
-        pts = tbl["geom_pt"].to_pylist()
-        cmds_col = [[9, p >> 13, p & 0x1FFF] for p in pts]
-    else:
-        cmds_col = tbl["geom_cmds"].to_pylist()
-    metas = tbl["meta"].to_pylist() if "meta" in tbl.column_names else [None] * n
-    # plain typed metadata columns (the columnar form)
-    extra = [
-        (f.name, _tag_for_arrow_type(f.type), tbl[f.name].to_pylist())
-        for f in tbl.schema
-        if f.name not in _CORE_COLS
-    ]
-
-    by_layer: dict[str, list] = {}
-    n_feats = 0
-    for i, (name, fid, meta, gt, cmds) in enumerate(
-        zip(layers_col, fids, metas, gts, cmds_col)
-    ):
-        if not cmds:
-            continue  # empty geometry would be undecodable (Internal.hs:296)
-        md = _meta_to_dict(meta)
-        for key, tag, vals in extra:
-            if vals[i] is not None:
-                md[key] = (tag, vals[i])
-        by_layer.setdefault(name, []).append(
-            (int(fid), md, int(gt), np.asarray(cmds, dtype=np.uint32))
-        )
-        n_feats += 1
-
-    body = bytearray()
-    for name in sorted(by_layer):  # deterministic layer order
-        body += wire.len_delimited(
-            3, codec.encode_layer_from_streams(name, by_layer[name], extent=extent)
-        )
-
-    return pa.table(
-        {
-            "tile_z": pa.array([z], pa.int32()),
-            "tile_x": pa.array([x], pa.int32()),
-            "tile_y": pa.array([y], pa.int32()),
-            "mvt": pa.array([bytes(body)], pa.binary()),
-            "n_features": pa.array([n_feats], pa.int64()),
-            "n_layers": pa.array([len(by_layer)], pa.int32()),
-        }
-    )
-
-
-def encode_tiles_grouped(
-    features: DataFrame,
-    max_per_tile: int | None = None,
-    extent: int = codec.DEFAULT_EXTENT,
-) -> DataFrame:
-    """groupBy + applyInArrow variant: one Python call per tile. Simple and
-    correct, but per-group overhead (~ms) dominates when tiles are small —
-    kept for comparison; ``encode_tiles`` is the production path."""
-    if max_per_tile is not None:
-        features = cap_features_per_tile(features, max_per_tile)
-    def encode_group(tbl):  # applyInArrow introspects the signature;
-        return _encode_tile_group_arrow(tbl, extent=extent)  # partials break it
-
-    return features.groupBy("tile_z", "tile_x", "tile_y").applyInArrow(
-        encode_group, schema=TILE_SCHEMA
-    )
-
-
 _CORE_COLS = {
     "tile_z", "tile_x", "tile_y", "layer", "geom_type", "feature_id",
     "meta", "geom_cmds", "geom_pt",
@@ -539,28 +409,162 @@ def _tag_for_arrow_type(t) -> int:
     raise ValueError(f"unsupported metadata column type {t}")
 
 
-def _make_encode_stream(extent: int = codec.DEFAULT_EXTENT, layer_const: str | None = None):
-    """Stream-encoder factory (extent is captured in the closure so all
-    wire paths declare the layer extent that the upstream pixel math used).
+# struct field carrying each value tag's payload (META_FIELD)
+_STRUCT_VALUE_FIELDS = {
+    "s": (codec.VAL_STRING,),
+    "d": (codec.VAL_FLOAT, codec.VAL_DOUBLE),
+    "i": (codec.VAL_INT, codec.VAL_UINT, codec.VAL_SINT),
+    "b": (codec.VAL_BOOL,),
+}
 
-    The encoder consumes (tile-key-sorted) Arrow batches, slices tile
-    runs with NumPy boundary detection, carries the (possibly incomplete)
-    tail tile across batch boundaries. ONE Python crossing per ~64k rows
-    instead of one per tile.
 
-    Metadata columns (any column beyond the core feature schema) are
-    FACTORIZED ONCE PER BATCH (pandas) and their dictionary uniques
-    pre-encoded to wire bytes; per tile the codec only slices the code
-    arrays (codec.encode_layer_columnar). A legacy per-feature
-    ARRAY<STRUCT> 'meta' column is also honored (slow path) for operators
-    with heterogeneous metadata."""
-    import pandas as pd
+def _struct_meta_specs(meta) -> list[tuple[str, np.ndarray, np.ndarray, np.ndarray]]:
+    """ARRAY<STRUCT> ``meta`` (META_FIELD) -> one columnar metadata spec
+    (key, codes, framed_buf, framed_off) per distinct key, keys sorted —
+    the form codec.encode_multi_tile_batch takes.
+
+    A key's value dictionary is keyed on (tag, value), floats by bit
+    pattern, so one key may carry several value types. A key listed twice
+    in one feature's list keeps its last entry. Entries with a NULL key, an
+    unknown tag or a NULL value are skipped like NULL plain-column values.
+    Vectorized over the flattened entries; Python loops only over tags and
+    distinct keys."""
     import pyarrow as pa
+    import pyarrow.compute as pc
 
     from ..mvt import wire
 
-    def flush(tbl: pa.Table, is_last: bool = True):
-        """Encode every (complete) tile run in tbl."""
+    ent = pc.list_flatten(meta)
+    if len(ent) == 0:
+        return []
+    row = pc.list_parent_indices(meta).to_numpy().astype(np.int64)
+    tag = pc.fill_null(ent.field("tag"), 0).to_numpy(zero_copy_only=False).astype(np.int64)
+    kd = ent.field("key").dictionary_encode()
+    kcode = pc.fill_null(kd.indices, -1).to_numpy(zero_copy_only=False).astype(np.int64)
+    ok = ent.is_valid().to_numpy(zero_copy_only=False) & (kcode >= 0)
+    # per-entry value identity: string dictionary code, float bit pattern,
+    # integer, or bool
+    ident = np.zeros(len(ent), dtype=np.int64)
+    has_value = np.zeros(len(ent), dtype=bool)
+    for fname, tags in _STRUCT_VALUE_FIELDS.items():
+        sel = np.isin(tag, tags)
+        col = ent.field(fname)
+        has_value |= sel & col.is_valid().to_numpy(zero_copy_only=False)
+        if fname == "s":
+            vals = pc.fill_null(col.dictionary_encode().indices, 0).to_numpy(zero_copy_only=False)
+        elif fname == "d":
+            vals = pc.fill_null(col, 0.0).to_numpy(zero_copy_only=False).view(np.int64)
+        else:
+            vals = pc.fill_null(col, False if fname == "b" else 0).to_numpy(zero_copy_only=False)
+        ident[sel] = vals[sel].astype(np.int64)
+    e = np.flatnonzero(ok & has_value)
+    if not e.size:
+        return []
+    # keys in sorted order: remap dictionary codes to sorted rank
+    names = kd.dictionary.to_pylist()
+    krank = np.empty(len(names), dtype=np.int64)
+    krank[sorted(range(len(names)), key=names.__getitem__)] = np.arange(len(names))
+    names = sorted(names)
+    # last entry wins per (row, key): unique over the reversed pairs
+    pair = row[e] * len(names) + krank[kcode[e]]
+    _, last = np.unique(pair[::-1], return_index=True)
+    e = e[np.sort(e.size - 1 - last)]
+    r, k, t, v = row[e], krank[kcode[e]], tag[e], ident[e]
+    # one dictionary entry per distinct (key, tag, value)
+    order = np.lexsort((v, t, k))
+    ko, to, vo = k[order], t[order], v[order]
+    new = np.concatenate([[True], (ko[1:] != ko[:-1]) | (to[1:] != to[:-1]) | (vo[1:] != vo[:-1])])
+    gid = np.cumsum(new) - 1  # per sorted entry
+    g_key, g_tag, g_rep = ko[new], to[new], e[order[new]]
+    # frame every entry's value bytes, one frame_values_vec call per tag
+    g_start = np.zeros(g_tag.size, dtype=np.int64)
+    g_len = np.zeros(g_tag.size, dtype=np.int64)
+    bufs, base = [], 0
+    for fname, tags in _STRUCT_VALUE_FIELDS.items():
+        for tg in tags:
+            gs = np.flatnonzero(g_tag == tg)
+            if not gs.size:
+                continue
+            fbuf, foff = codec.frame_values_vec(tg, ent.field(fname).take(pa.array(g_rep[gs])))
+            g_start[gs] = base + foff[:-1]
+            g_len[gs] = np.diff(foff)
+            bufs.append(fbuf)
+            base += fbuf.size
+    allbuf = np.concatenate(bufs)
+    g_bounds = np.searchsorted(g_key, np.arange(len(names) + 1))
+    e_bounds = np.searchsorted(ko, np.arange(len(names) + 1))
+    specs = []
+    for ki, name in enumerate(names):
+        g0, g1 = g_bounds[ki], g_bounds[ki + 1]
+        if g0 == g1:
+            continue
+        codes = np.full(len(meta), -1, dtype=np.int64)
+        sl = slice(e_bounds[ki], e_bounds[ki + 1])
+        codes[r[order[sl]]] = gid[sl] - g0
+        lens = g_len[g0:g1]
+        specs.append((
+            name, codes, wire.ragged_gather(allbuf, g_start[g0:g1], lens),
+            np.concatenate([[0], np.cumsum(lens)]),
+        ))
+    return specs
+
+
+def _meta_specs(tbl) -> list[tuple[str, np.ndarray, np.ndarray, np.ndarray]]:
+    """Columnar metadata specs for one Arrow table: every plain typed
+    column (any column beyond the core feature schema), dictionary-encoded
+    once (Arrow C++) with its uniques framed to value wire bytes, then the
+    ARRAY<STRUCT> ``meta`` column's keys, sorted. A struct key that names a
+    plain column joins that column's spec; the plain value wins where a
+    feature carries both."""
+    import pyarrow.compute as pc
+
+    def one_chunk(col):
+        col = col.combine_chunks()
+        return col.chunk(0) if hasattr(col, "chunk") else col  # older pyarrow
+
+    specs: list[tuple[str, np.ndarray, np.ndarray, np.ndarray]] = []
+    for field in tbl.schema:
+        if field.name in _CORE_COLS:
+            continue
+        tag = _tag_for_arrow_type(field.type)
+        d = one_chunk(tbl[field.name]).dictionary_encode()
+        codes = pc.fill_null(d.indices, -1).to_numpy(zero_copy_only=False).astype(np.int64)
+        fbuf, foff = codec.frame_values_vec(tag, d.dictionary)
+        specs.append((field.name, codes, fbuf, foff))
+    if "meta" not in tbl.column_names:
+        return specs
+    plain = {spec[0]: i for i, spec in enumerate(specs)}
+    for key, codes, fbuf, foff in _struct_meta_specs(one_chunk(tbl["meta"])):
+        j = plain.get(key)
+        if j is None:
+            specs.append((key, codes, fbuf, foff))
+            continue
+        _, pcodes, pbuf, poff = specs[j]
+        codes = np.where(pcodes >= 0, pcodes, np.where(codes >= 0, codes + len(poff) - 1, -1))
+        specs[j] = (key, codes, np.concatenate([pbuf, fbuf]), np.concatenate([poff, poff[-1] + foff[1:]]))
+    return specs
+
+
+def _make_encode_stream(extent: int = codec.DEFAULT_EXTENT, layer_const: str | None = None):
+    """Stream-encoder factory (extent is captured in the closure so every
+    tile declares the layer extent that the upstream pixel math used).
+
+    The encoder consumes (tile-key-sorted) Arrow batches and carries the
+    (possibly incomplete) tail tile across batch boundaries. Each batch of
+    complete tiles goes through ONE codec.encode_multi_tile_batch call —
+    one Python crossing per ~64k rows, no per-tile or per-feature Python —
+    whatever its shape:
+
+    * metadata: plain typed columns and the ARRAY<STRUCT> ``meta`` column
+      both become columnar specs once per batch (_meta_specs); NULL values
+      are NULL codes, which the kernel skips;
+    * empty command streams (degenerate geometry) are dropped before the
+      kernel; a tile left with no feature still yields its row, with empty
+      bytes and zero counts."""
+    import pyarrow as pa
+
+    def flush(tbl: pa.Table) -> pa.RecordBatch:
+        """Encode every tile run in tbl (all runs complete)."""
         # NULLs in the core columns would NOT error downstream — they would
         # CORRUPT silently: Arrow converts a null-bearing int column to
         # float64 NaN, .astype(int64) turns NaN into INT64_MIN garbage
@@ -577,9 +581,10 @@ def _make_encode_stream(extent: int = codec.DEFAULT_EXTENT, layer_const: str | N
         z = tbl["tile_z"].to_numpy(zero_copy_only=False)
         x = tbl["tile_x"].to_numpy(zero_copy_only=False)
         y = tbl["tile_y"].to_numpy(zero_copy_only=False)
-        change = (z[1:] != z[:-1]) | (x[1:] != x[:-1]) | (y[1:] != y[:-1])
-        starts = np.concatenate([[0], np.flatnonzero(change) + 1])
         n = tbl.num_rows
+        tile_first = np.concatenate(
+            [[True], (z[1:] != z[:-1]) | (x[1:] != x[:-1]) | (y[1:] != y[:-1])]
+        )
         if "layer" in tbl.column_names:
             lcodes, lnames = pd.factorize(tbl["layer"].to_pandas())
             lnames = list(lnames)
@@ -588,6 +593,7 @@ def _make_encode_stream(extent: int = codec.DEFAULT_EXTENT, layer_const: str | N
             lnames = [layer_const]
         fids = tbl["feature_id"].to_numpy(zero_copy_only=False)
         gts = tbl["geom_type"].to_numpy(zero_copy_only=False)
+        keep = None
         if "geom_pt" in tbl.column_names:
             # packed single-point geometry -> synthesize the command stream
             pt = tbl["geom_pt"].to_numpy(zero_copy_only=False).astype(np.int64)
@@ -596,7 +602,6 @@ def _make_encode_stream(extent: int = codec.DEFAULT_EXTENT, layer_const: str | N
             gvals[1::3] = pt >> 13
             gvals[2::3] = pt & 0x1FFF
             goff = np.arange(0, 3 * n + 3, 3, dtype=np.int64)[: n + 1]
-            glens = np.full(n, 3, dtype=np.int64)
         else:
             # zero-copy ragged view of the command streams (no pylist)
             cmds_arr = tbl["geom_cmds"].combine_chunks()
@@ -604,119 +609,44 @@ def _make_encode_stream(extent: int = codec.DEFAULT_EXTENT, layer_const: str | N
                 cmds_arr = cmds_arr.chunk(0)
             goff = cmds_arr.offsets.to_numpy().astype(np.int64)
             gvals = cmds_arr.values.to_numpy(zero_copy_only=False)
-            glens = goff[1:] - goff[:-1]
-        metas = tbl["meta"].to_pylist() if "meta" in tbl.column_names else None
+            if np.diff(goff).min(initial=1) == 0:
+                keep = goff[1:] > goff[:-1]
+        meta_specs = _meta_specs(tbl)
 
-        # dictionary-encode metadata columns once per batch (Arrow C++, no
-        # PyObject churn) and frame their uniques' value bytes vectorized
-        import pyarrow.compute as pc
-
-        meta_specs: list[tuple[str, np.ndarray, np.ndarray, np.ndarray]] = []
-        for field in tbl.schema:
-            if field.name in _CORE_COLS:
-                continue
-            tag = _tag_for_arrow_type(field.type)
-            col = tbl[field.name].combine_chunks()
-            if hasattr(col, "chunk"):  # older pyarrow returns ChunkedArray
-                col = col.chunk(0)
-            d = col.dictionary_encode()
-            codes = pc.fill_null(d.indices, -1).to_numpy(zero_copy_only=False).astype(np.int64)
-            fbuf, foff = codec.frame_values_vec(tag, d.dictionary)
-            meta_specs.append((field.name, codes, fbuf, foff))
-
-        # ---- whole-batch vectorized path: every tile in ~20 array passes ----
-        all_nonempty_batch = bool(glens.min(initial=1) > 0)
-        codes_ok_batch = all(codes.min(initial=0) >= 0 for _, codes, _, _ in meta_specs)
-        metas_empty = metas is None or not any(metas)
-        if metas_empty and all_nonempty_batch and codes_ok_batch and n:
-            mvts, tile_starts, n_runs_per_tile = codec.encode_multi_tile_batch(
+        out_z, out_x, out_y = z[tile_first], x[tile_first], y[tile_first]
+        n_tiles = out_z.size
+        if keep is not None:
+            # an empty feature would make the tile undecodable
+            # (Internal.hs:296): drop those rows. Offsets stay contiguous,
+            # since a dropped row spans no command values
+            tile_of = (np.cumsum(tile_first) - 1)[keep]
+            goff = np.append(goff[:-1][keep], goff[-1])
+            z, x, y, lcodes, fids, gts = (a[keep] for a in (z, x, y, lcodes, fids, gts))
+            meta_specs = [(k, c[keep], b, o) for k, c, b, o in meta_specs]
+        mvt = [b""] * n_tiles
+        nf = np.zeros(n_tiles, dtype=np.int64)
+        nl = np.zeros(n_tiles, dtype=np.int64)
+        if fids.size:
+            mvts, ts, runs = codec.encode_multi_tile_batch(
                 z, x, y, lcodes, lnames, fids, gts, gvals, goff, meta_specs,
                 extent=extent,
             )
-            ts = tile_starts
-            nf = np.diff(np.concatenate([ts, [n]]))
-            return pa.record_batch(
-                {
-                    "tile_z": pa.array(z[ts].astype(np.int32), pa.int32()),
-                    "tile_x": pa.array(x[ts].astype(np.int32), pa.int32()),
-                    "tile_y": pa.array(y[ts].astype(np.int32), pa.int32()),
-                    "mvt": pa.array(mvts, pa.binary()),
-                    "n_features": pa.array(nf.astype(np.int64), pa.int64()),
-                    "n_layers": pa.array(n_runs_per_tile.astype(np.int32), pa.int32()),
-                }
-            )
-
-        ends = np.concatenate([starts[1:], [n]])
-        out_z, out_x, out_y, out_mvt, out_nf, out_nl = [], [], [], [], [], []
-        for lo, hi in zip(starts.tolist(), ends.tolist()):
-            body = bytearray()
-            n_feats = 0
-            n_layers = 0
-            # split the run by layer (runs are layer-sorted within tile)
-            lchange = np.flatnonzero(lcodes[lo + 1:hi] != lcodes[lo:hi - 1]) + lo + 1
-            lstarts = [lo] + lchange.tolist()
-            lends = lstarts[1:] + [hi]
-            for ls, le in zip(lstarts, lends):
-                run_glens = glens[ls:le]
-                has_meta_structs = metas is not None and any(metas[i] for i in range(ls, le))
-                all_nonempty = bool(run_glens.min(initial=1) > 0)
-                codes_ok = all(
-                    codes[ls:le].min(initial=0) >= 0 for _, codes, _, _ in meta_specs
-                )
-                if not has_meta_structs and all_nonempty and codes_ok and (le - ls) >= 64:
-                    # vectorized hot-tile path: no per-feature Python at all
-                    layer_bytes = codec.encode_layer_columnar_vec(
-                        lnames[lcodes[ls]],
-                        fids[ls:le],
-                        gts[ls:le],
-                        gvals[goff[ls]:goff[le]],
-                        goff[ls:le + 1] - goff[ls],
-                        [(key, codes[ls:le], fbuf, foff) for key, codes, fbuf, foff in meta_specs],
-                        extent=extent,
-                    )
-                    n_feats += le - ls
-                elif has_meta_structs:
-                    idx = [i for i in range(ls, le) if glens[i] > 0]
-                    if not idx:
-                        continue
-                    feats = [
-                        (int(fids[i]), _meta_to_dict(metas[i]), int(gts[i]),
-                         gvals[goff[i]:goff[i + 1]].astype(np.uint32))
-                        for i in idx
-                    ]
-                    layer_bytes = codec.encode_layer_from_streams(
-                        lnames[lcodes[ls]], feats, extent=extent
-                    )
-                    n_feats += len(idx)
-                else:
-                    idx = [i for i in range(ls, le) if glens[i] > 0]
-                    if not idx:
-                        continue
-                    layer_bytes = codec.encode_layer_columnar(
-                        lnames[lcodes[ls]],
-                        fids[idx],
-                        gts[idx],
-                        [gvals[goff[i]:goff[i + 1]] for i in idx],
-                        [(key, codes[idx], fbuf, foff) for key, codes, fbuf, foff in meta_specs],
-                        extent=extent,
-                    )
-                    n_feats += len(idx)
-                body += wire.len_delimited(3, layer_bytes)
-                n_layers += 1
-            out_z.append(int(z[lo]))
-            out_x.append(int(x[lo]))
-            out_y.append(int(y[lo]))
-            out_mvt.append(bytes(body))
-            out_nf.append(n_feats)
-            out_nl.append(n_layers)
+            counts = np.diff(np.append(ts, fids.size))
+            if keep is None:
+                mvt, nf, nl = mvts, counts, runs
+            else:
+                tid = tile_of[ts]
+                for t, b in zip(tid.tolist(), mvts):
+                    mvt[t] = b
+                nf[tid], nl[tid] = counts, runs
         return pa.record_batch(
             {
-                "tile_z": pa.array(out_z, pa.int32()),
-                "tile_x": pa.array(out_x, pa.int32()),
-                "tile_y": pa.array(out_y, pa.int32()),
-                "mvt": pa.array(out_mvt, pa.binary()),
-                "n_features": pa.array(out_nf, pa.int64()),
-                "n_layers": pa.array(out_nl, pa.int32()),
+                "tile_z": pa.array(out_z.astype(np.int32), pa.int32()),
+                "tile_x": pa.array(out_x.astype(np.int32), pa.int32()),
+                "tile_y": pa.array(out_y.astype(np.int32), pa.int32()),
+                "mvt": pa.array(mvt, pa.binary()),
+                "n_features": pa.array(nf.astype(np.int64), pa.int64()),
+                "n_layers": pa.array(nl.astype(np.int32), pa.int32()),
             }
         )
 
@@ -742,7 +672,7 @@ def _make_encode_stream(extent: int = codec.DEFAULT_EXTENT, layer_const: str | N
                 else pa.concat_tables(carry_parts)
             ).combine_chunks()
             carry_parts, carry_key = [], None
-            return flush(whole, is_last=True)
+            return flush(whole)
 
         for batch in batches:
             tbl = pa.Table.from_batches([batch])
@@ -777,7 +707,7 @@ def _make_encode_stream(extent: int = codec.DEFAULT_EXTENT, layer_const: str | N
             starts = np.flatnonzero(change) + 1
             last_start = int(starts[-1]) if starts.size else 0
             if last_start > 0:
-                rb = flush(tbl.slice(0, last_start).combine_chunks(), is_last=True)
+                rb = flush(tbl.slice(0, last_start).combine_chunks())
                 if rb is not None and rb.num_rows:
                     yield rb
             carry_parts.append(tbl.slice(last_start))
@@ -878,20 +808,8 @@ def encode_tiles(
         features = features.drop("layer")
     key = [F.col("tile_z"), F.col("tile_x"), F.col("tile_y")]
     if not partitions:
-        # pin an explicit partition count: the encode stage is Python-CPU
-        # bound, and AQE's size-based coalescing (64MB advisory) would fold
-        # a few hundred MB of shuffle into a handful of partitions and
-        # serialize the workers. In LOCAL mode each concurrent task costs
-        # ~2 cores (JVM row->Arrow feed thread + python worker), so when the
-        # task slots already cover the physical cores, pin to cores/2 to
-        # avoid 2x oversubscription (measured 8.4s vs 1.1s on 200k rows).
-        import os
-
-        sc = features.sparkSession.sparkContext
-        partitions = sc.defaultParallelism
-        ncpu = os.cpu_count() or partitions
-        if sc.master.startswith("local[") and partitions >= ncpu:
-            partitions = max(1, ncpu // 2)
+        # the encode stage is Python-CPU bound: pin its partition count
+        partitions = python_stage_partitions(features.sparkSession)
     if max_per_tile is not None:
         # the cap's exact phase-2 window rides the encode repartition
         # (hash(tile) clusters every window group): 2 cap exchanges + the

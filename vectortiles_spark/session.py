@@ -38,6 +38,22 @@ def _tune_malloc():
     os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
 
 
+def python_stage_partitions(spark: SparkSession) -> int:
+    """Partition count for a Python-CPU-bound exchange (the encode and
+    downzoom stages pin it, because AQE's size-based coalescing would fold
+    a few MB of shuffle into a handful of partitions and serialize the
+    workers): the default parallelism, except in LOCAL mode when those
+    slots already cover the cores — each concurrent task there costs ~2
+    cores (JVM row->Arrow feed thread + python worker), so cores/2 avoids
+    2x oversubscription (measured 8.4s vs 1.1s on 200k rows)."""
+    sc = spark.sparkContext
+    parts = sc.defaultParallelism
+    ncpu = os.cpu_count() or parts
+    if sc.master.startswith("local[") and parts >= ncpu:
+        return max(1, ncpu // 2)
+    return parts
+
+
 def get_spark(
     app_name: str = "vectortiles_spark",
     master: str | None = None,
