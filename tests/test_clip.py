@@ -599,6 +599,18 @@ def _scalar_line_clip_reference(parts_l, pf, bbox, extent, buffer_px, n):
     return out
 
 
+def _batched_rows(out):
+    """_clip_lines_batched's row/chain/point buffers as the scalar
+    reference's {(fi, tx, ty): [chain point lists]} dict."""
+    row_fi, row_tx, row_ty, row_nchains, chain_npts, pts = out
+    chains = np.split(pts, np.cumsum(chain_npts)[:-1]) if len(chain_npts) else []
+    grouped = np.split(np.arange(len(chains)), np.cumsum(row_nchains)[:-1])
+    return {
+        (int(f), int(x), int(y)): [chains[c].tolist() for c in cs]
+        for f, x, y, cs in zip(row_fi, row_tx, row_ty, grouped)
+    }
+
+
 @pytest.mark.parametrize("buffer_px", [0, 8])
 def test_clip_lines_batched_equals_scalar_reference(buffer_px, monkeypatch):
     """The whole-batch line-clip kernel must reproduce the per-tile
@@ -637,23 +649,17 @@ def test_clip_lines_batched_equals_scalar_reference(buffer_px, monkeypatch):
     covers[:, 2] = np.clip(np.floor((bb[:, 1] - buffer_px) / extent), 0, n - 1)
     covers[:, 3] = np.clip(np.floor((bb[:, 3] + buffer_px) / extent), 0, n - 1)
     want = _scalar_line_clip_reference(parts_l, pf, bbox, extent, buffer_px, n)
-    got = {
-        k: parts
-        for k, parts in C._clip_lines_batched(
-            seg_a, seg_b, sc, np.asarray(pf), covers, extent, buffer_px, n
-        )
-    }
+    got = _batched_rows(
+        C._clip_lines_batched(seg_a, seg_b, sc, np.asarray(pf), covers, extent, buffer_px, n)
+    )
     assert got == want
     # CHUNKED path: shrink the row bound so the same input goes through
     # the chunk-and-stitch branch — results must be identical, including
     # (feature, tile) groups straddling a chunk boundary
     monkeypatch.setattr(C, "_CHUNK_ROWS", 500)
-    got_chunked = {
-        k: parts
-        for k, parts in C._clip_lines_batched(
-            seg_a, seg_b, sc, np.asarray(pf), covers, extent, buffer_px, n
-        )
-    }
+    got_chunked = _batched_rows(
+        C._clip_lines_batched(seg_a, seg_b, sc, np.asarray(pf), covers, extent, buffer_px, n)
+    )
     assert got_chunked == want
     monkeypatch.setattr(C, "_CHUNK_ROWS", 2_000_000)
     big_parts = [np.column_stack([np.linspace(0, n * extent, 3000), np.full(3000, 1.0)])]
@@ -666,5 +672,5 @@ def test_clip_lines_batched_equals_scalar_reference(buffer_px, monkeypatch):
         covers2, extent, buffer_px, n,
     )
     want_big = _scalar_line_clip_reference(big_parts, big_pf, big_bbox, extent, buffer_px, n)
-    got_big_d = {k: p for k, p in got_big}
+    got_big_d = _batched_rows(got_big)
     assert got_big_d == want_big

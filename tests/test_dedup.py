@@ -97,6 +97,38 @@ def test_minhash_signature_stable_across_partitioning(spark):
     assert sorted(map(tuple, one.collect())) == sorted(map(tuple, many.collect()))
 
 
+def test_minhash_null_hashes_are_omitted(spark):
+    """A custom hasher that is NULL on some shingles gives the signatures
+    of the shingle relation without them — computed here in NumPy from
+    the non-NULL hashes; a doc whose every shingle hashes NULL gets no
+    signature, like a doc without shingles."""
+    pdf, _ = _corpus(n=20)
+    pdf.loc[len(pdf)] = [999, "alpha alpha alpha alpha"]
+    docs = spark.createDataFrame(pdf).repartition(3)
+
+    def null_on_alpha(c):
+        return F.when(c.contains("alpha"), F.lit(None).cast("bigint")).otherwise(
+            dedup.default_hasher(c)
+        )
+
+    got = {
+        r["doc_id"]: [r[f"mh{i}"] for i in range(dedup._H)]
+        for r in dedup.minhash_signatures(docs, hasher=null_on_alpha).collect()
+    }
+    rows = dedup.shingle_docs(docs, hasher=null_on_alpha).collect()
+    assert any(r["h31"] is None for r in rows)
+    hashes = {}
+    for r in rows:
+        if r["h31"] is not None:
+            hashes.setdefault(r["doc_id"], []).append(r["h31"])
+    want = {
+        d: [min((a * h + b) % dedup._P for h in hs) for a, b in dedup._hash_params(dedup._H)]
+        for d, hs in hashes.items()
+    }
+    assert 999 not in want
+    assert got == want
+
+
 def test_band_bucket_cap_bounds_degenerate_clusters(spark):
     """2000 identical docs would make every LSH band bucket quadratic
     (2M pairs per band) without the cap; with band_cap the candidate space

@@ -59,6 +59,16 @@ def test_rect_overlap_counts_exact(spark):
             assert out.get((fa, fb), 0) == exp, (fa, fb)
 
 
+def test_full_cover_count_exact_past_float32_grid(spark):
+    """A grid just over 2^24 pixels (odd, so float32 cannot even hold
+    the total) still counts every pixel of two full-cover polygons."""
+    n = 4097
+    a = _rect_feats(spark, [(1, 0, 0, 0, n, n)])
+    b = _rect_feats(spark, [(2, 0, 0, 0, n, n)])
+    out = overlay_areas(a, b, w=n, h=n, extent=n).collect()
+    assert [(r["feature_a"], r["feature_b"], r["n_px"]) for r in out] == [(1, 2, n * n)]
+
+
 def test_disjoint_tiles_never_pair(spark):
     a = _rect_feats(spark, [(1, 0, 0, 0, 4096, 4096)])
     b = _rect_feats(spark, [(2, 1, 0, 0, 4096, 4096)])

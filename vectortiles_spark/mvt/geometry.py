@@ -275,47 +275,104 @@ def geom_to_stream(geom_type: int, geom) -> np.ndarray:
     raise ValueError("Geometry type of UNKNOWN given.")
 
 
-def geoms_to_streams_batch(
-    feats: list[tuple[int, object]],
+PART_POINT, PART_LINE, PART_RING = 0, 1, 2
+
+
+def parts_to_streams(
+    pts: np.ndarray, sizes: np.ndarray, kinds: np.ndarray, feat_nparts: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Batch twin of geom_to_stream over a whole layer's features: ONE
-    global delta + zigzag pass and a vectorized header/coordinate scatter
-    instead of a Python loop per feature/part (the encode-side mirror of
-    fastdecode's whole-tile assembly; bytes are identical to calling
-    geom_to_stream per feature — differential-pinned in tests).
+    """The vectorized command-stream encoder: ONE global delta + zigzag
+    pass and a header/coordinate scatter over a whole batch of features,
+    no Python loop per feature or part.
+
+    Input is offsets-form geometry: `pts` = every part's int64 points
+    concatenated (ring parts WITHOUT their closing point, as
+    polygon_to_commands drops it), `sizes` = points per part, `kinds` =
+    PART_POINT (one multipoint MoveTo), PART_LINE or PART_RING per part,
+    `feat_nparts` = parts per feature (a feature's parts are consecutive;
+    a feature with none gets an empty stream). Point parts need >= 1
+    point, line and ring parts >= 2 — the shapes geom_to_stream encodes
+    without error.
 
     Key identity making one global diff correct: within a feature the
     cursor after each part/ring is its LAST emitted point, which is
-    exactly the PREVIOUS row of the concatenated point matrix (rings drop
-    their closing point before concatenation, same as
-    polygon_to_commands); only each feature's first row needs the
-    cursor-reset fix-up delta = point - (0,0).
+    exactly the PREVIOUS row of the concatenated point matrix; only each
+    feature's first row needs the cursor-reset fix-up delta = point -
+    (0,0).
 
     Returns (values uint32, offsets int64): feature i's stream is
-    values[offsets[i]:offsets[i+1]]. Degenerate parts (empty point sets,
-    1-point rings, ...) take the scalar path per feature so error/byte
-    behavior cannot drift.
+    values[offsets[i]:offsets[i+1]], byte-identical to geom_to_stream.
+    """
+    feat_first_part = np.zeros(len(feat_nparts) + 1, dtype=np.int64)
+    np.cumsum(feat_nparts, out=feat_first_part[1:])
+    npts = len(pts)
+    deltas = np.empty_like(pts)
+    if npts:
+        deltas[0] = pts[0]
+        np.subtract(pts[1:], pts[:-1], out=deltas[1:])
+    part_row_start = np.concatenate([[0], np.cumsum(sizes)[:-1]]).astype(np.int64)
+    # cursor resets to (0,0) at each FEATURE's first row
+    nonempty = feat_first_part[:-1] != feat_first_part[1:]
+    feat_rows = part_row_start[feat_first_part[:-1][nonempty]]
+    deltas[feat_rows] = pts[feat_rows]
+    zz = zig(deltas.ravel())
+
+    # per-part output length: point 1+2n, line 2+2n, ring 3+2n
+    out_lens = 2 * sizes + 1 + (kinds != PART_POINT) + (kinds == PART_RING)
+    out_start = np.concatenate([[0], np.cumsum(out_lens)]).astype(np.int64)
+    out = np.empty(int(out_start[-1]), dtype=np.uint32)
+    # headers
+    is_pt = kinds == PART_POINT
+    out[out_start[:-1][is_pt]] = (
+        (sizes[is_pt].astype(np.uint32) << np.uint32(3)) | np.uint32(CMD_MOVETO)
+    )
+    ml = ~is_pt
+    out[out_start[:-1][ml]] = np.uint32((1 << 3) | CMD_MOVETO)
+    out[out_start[:-1][ml] + 3] = (
+        ((sizes[ml] - 1).astype(np.uint32) << np.uint32(3)) | np.uint32(CMD_LINETO)
+    )
+    is_ring = kinds == PART_RING
+    out[out_start[:-1][is_ring] + 2 * sizes[is_ring] + 2] = np.uint32(
+        (1 << 3) | CMD_CLOSEPATH
+    )
+    # coordinates: row i of part p at out_start[p] + 1 + 2i (+1 if a
+    # line/ring row past the MoveTo — the LineTo header sits between)
+    row_part = np.repeat(np.arange(len(sizes)), sizes)
+    row_i = np.arange(npts, dtype=np.int64) - part_row_start[row_part]
+    pos = out_start[row_part] + 1 + 2 * row_i + ((row_i > 0) & ml[row_part])
+    out[pos] = zz[0::2]
+    out[pos + 1] = zz[1::2]
+    # per-feature offsets (parts of a feature are contiguous)
+    return out, out_start[feat_first_part]
+
+
+def geoms_to_streams_batch(
+    feats: list[tuple[int, object]],
+) -> tuple[np.ndarray, np.ndarray]:
+    """Batch twin of geom_to_stream over a whole layer's features in the
+    geometry representations above: the parts are concatenated and
+    encoded by parts_to_streams (bytes identical to calling
+    geom_to_stream per feature — differential-pinned in tests).
+
+    Returns (values uint32, offsets int64) like parts_to_streams.
+    Degenerate parts (empty point sets, 1-point rings, ...) take the
+    scalar path per feature so error/byte behavior cannot drift.
     """
     nf = len(feats)
-    offsets = np.zeros(nf + 1, dtype=np.int64)
-    if nf == 0:
-        return np.zeros(0, dtype=np.uint32), offsets
-
-    _K_PT, _K_LINE, _K_RING = 0, 1, 2
     part_arrays: list[np.ndarray] = []   # (k,2) int64, rings closing-dropped
     part_kind: list[int] = []
-    feat_first_part = np.zeros(nf + 1, dtype=np.int64)
+    feat_nparts = np.zeros(nf, dtype=np.int64)
     scalar_streams: dict[int, np.ndarray] = {}
     for f, (gt, geom) in enumerate(feats):
         if gt == GEOM_POINT:
-            parts = [(np.asarray(geom, dtype=np.int64).reshape(-1, 2), _K_PT)]
+            parts = [(np.asarray(geom, dtype=np.int64).reshape(-1, 2), PART_POINT)]
         elif gt == GEOM_LINESTRING:
             parts = [
-                (np.asarray(p, dtype=np.int64).reshape(-1, 2), _K_LINE) for p in geom
+                (np.asarray(p, dtype=np.int64).reshape(-1, 2), PART_LINE) for p in geom
             ]
         elif gt == GEOM_POLYGON:
             parts = [
-                (np.asarray(r, dtype=np.int64).reshape(-1, 2)[:-1], _K_RING)
+                (np.asarray(r, dtype=np.int64).reshape(-1, 2)[:-1], PART_RING)
                 for poly in geom
                 for r in poly
             ]
@@ -324,76 +381,35 @@ def geoms_to_streams_batch(
         # degenerate shapes (no parts, or a part the vector layout can't
         # express: empty point part / sub-2-point line / ring) -> scalar
         if not parts or any(
-            len(p) == 0 or (k != _K_PT and len(p) < 2) for p, k in parts
+            len(p) == 0 or (k != PART_POINT and len(p) < 2) for p, k in parts
         ):
             scalar_streams[f] = geom_to_stream(gt, geom)
-            feat_first_part[f + 1] = feat_first_part[f]
             continue
         part_arrays.extend(p for p, _ in parts)
         part_kind.extend(k for _, k in parts)
-        feat_first_part[f + 1] = feat_first_part[f] + len(parts)
+        feat_nparts[f] = len(parts)
 
-    if part_arrays:
-        sizes = np.fromiter((len(p) for p in part_arrays), np.int64, count=len(part_arrays))
-        kinds = np.asarray(part_kind, dtype=np.int64)
-        all_pts = np.concatenate(part_arrays, axis=0)
-        npts = len(all_pts)
-        deltas = np.empty_like(all_pts)
-        deltas[0] = all_pts[0]
-        np.subtract(all_pts[1:], all_pts[:-1], out=deltas[1:])
-        part_row_start = np.concatenate([[0], np.cumsum(sizes)[:-1]])
-        # cursor resets to (0,0) at each FEATURE's first row
-        feat_rows = part_row_start[feat_first_part[:-1][feat_first_part[:-1] != feat_first_part[1:]]]
-        deltas[feat_rows] = all_pts[feat_rows]
-        zz = zig(deltas.ravel())
-
-        # per-part output length: point 1+2n, line 2+2n, ring 3+2n
-        out_lens = 2 * sizes + 1 + (kinds != _K_PT) + (kinds == _K_RING)
-        out_start = np.concatenate([[0], np.cumsum(out_lens)])
-        out = np.empty(int(out_start[-1]), dtype=np.uint32)
-        # headers
-        is_pt = kinds == _K_PT
-        out[out_start[:-1][is_pt]] = (
-            (sizes[is_pt].astype(np.uint32) << np.uint32(3)) | np.uint32(CMD_MOVETO)
-        )
-        ml = ~is_pt
-        out[out_start[:-1][ml]] = np.uint32((1 << 3) | CMD_MOVETO)
-        out[out_start[:-1][ml] + 3] = (
-            ((sizes[ml] - 1).astype(np.uint32) << np.uint32(3)) | np.uint32(CMD_LINETO)
-        )
-        is_ring = kinds == _K_RING
-        out[out_start[:-1][is_ring] + 2 * sizes[is_ring] + 2] = np.uint32(
-            (1 << 3) | CMD_CLOSEPATH
-        )
-        # coordinates: row i of part p at out_start[p] + 1 + 2i (+1 if a
-        # line/ring row past the MoveTo — the LineTo header sits between)
-        row_part = np.repeat(np.arange(len(sizes)), sizes)
-        row_i = np.arange(npts, dtype=np.int64) - part_row_start[row_part]
-        pos = out_start[row_part] + 1 + 2 * row_i + ((row_i > 0) & ml[row_part])
-        out[pos] = zz[0::2]
-        out[pos + 1] = zz[1::2]
-        # per-feature lengths (parts of a feature are contiguous)
-        fp_cum = out_start[feat_first_part]
-        feat_lens = fp_cum[1:] - fp_cum[:-1]
-    else:
-        out = np.zeros(0, dtype=np.uint32)
-        feat_lens = np.zeros(nf, dtype=np.int64)
-
+    out, vec_offsets = parts_to_streams(
+        np.concatenate(part_arrays) if part_arrays else np.zeros((0, 2), np.int64),
+        np.fromiter((len(p) for p in part_arrays), np.int64, count=len(part_arrays)),
+        np.asarray(part_kind, dtype=np.int64),
+        feat_nparts,
+    )
+    if not scalar_streams:
+        return out, vec_offsets
+    # splice scalar-path features into their slots
+    feat_lens = np.diff(vec_offsets)
     for f, s in scalar_streams.items():
         feat_lens[f] = len(s)
+    offsets = np.zeros(nf + 1, dtype=np.int64)
     np.cumsum(feat_lens, out=offsets[1:])
-    if not scalar_streams:
-        return out, offsets
-    # splice scalar-path features into their slots
     values = np.empty(int(offsets[-1]), dtype=np.uint32)
-    vec_cursor = 0
     for f in range(nf):
         lo, hi = offsets[f], offsets[f + 1]
         if f in scalar_streams:
             values[lo:hi] = scalar_streams[f]
         else:
-            values[lo:hi] = out[vec_cursor:vec_cursor + (hi - lo)]
-            vec_cursor += hi - lo
+            values[lo:hi] = out[vec_offsets[f]:vec_offsets[f + 1]]
     return values, offsets
 
 

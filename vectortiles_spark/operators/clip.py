@@ -39,6 +39,10 @@ duplicated into both neighbors.
 
 Scale shape: one ``mapInArrow`` pass, no shuffle — the downstream
 ``encode_tiles`` shuffle on (z, x, y) is where fragments meet their tile.
+LINESTRING rows clip as one whole-batch kernel on the geometry column's
+offset/value buffers (_clip_lines_batched) and leave as buffers too;
+point and polygon rows take a per-feature lane, since the exact polygon
+clipper is a per-ring algorithm.
 Row amplification equals true tile coverage (bbox explode, then exact
 clip drops empty intersections), the same fan-out any planet tiler pays.
 
@@ -58,7 +62,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from ..mvt.geometry import GEOM_LINESTRING, GEOM_POINT, GEOM_POLYGON, points_in_ring
-from .arrow_geom import feature_parts
+from .arrow_geom import GEOM_INT64, feature_parts, geom_array, geom_buffers, starts_of
 
 DEFAULT_EXTENT = 4096
 
@@ -436,84 +440,87 @@ def _clip_lines_batched(
 
     The per-feature path costs ~20 NumPy dispatches per (feature, tile)
     on ~50-segment arrays — dispatch overhead, not compute, dominates the
-    clip stage. Here the Liang-Barsky parameters, chain assembly, tile
-    localization, rounding dedupe, and the exact-tiling high-edge
-    ownership test all run ONCE over the concatenated rows (segments
-    repeated per covered tile), with per-row rect bounds; only emission
-    bookkeeping and the final per-chain tolist remain Python. Semantics
-    are identical to clip_polyline + _localize_line per tile (the
-    differential test in tests/test_clip.py pins this).
+    clip stage. Here the emission expansion, Liang-Barsky parameters,
+    chain assembly, tile localization, rounding dedupe, the exact-tiling
+    high-edge ownership test and the grouping into output rows all run
+    ONCE over the concatenated rows (segments repeated per covered tile),
+    with per-row rect bounds; no Python loop runs per feature, tile or
+    chain. Semantics are identical to clip_polyline + _localize_line per
+    tile (the differential test in tests/test_clip.py pins this).
 
     Inputs: seg_a/seg_b = concatenated segment endpoints over all parts
     (feature order), sc = segment count per part, feat_of_part = owning
-    feature index per part, covers = (F, 4) int array of
-    tx_lo/tx_hi/ty_lo/ty_hi per feature.
+    feature index per part (non-decreasing), covers = (F, 4) int array
+    of tx_lo/tx_hi/ty_lo/ty_hi per feature.
 
-    Returns a list of ((feature_idx, tx, ty), [chain_int_lists...])
-    grouped per output row, in (feature, ty, tx) order.
+    Returns buffers ``(row_fi, row_tx, row_ty, row_nchains, chain_npts,
+    pts)``: one output row per (feature, tile) with clipped geometry, in
+    (feature, ty, tx) order, holding the next ``row_nchains`` chains (in
+    part order); chain c holds the next ``chain_npts[c]`` rows of the
+    (n, 2) int64 tile-local `pts`.
     """
-    # emissions ordered (feature, ty, tx, part) — matching the
-    # per-feature path's nesting so multi-chain rows keep part order
-    parts_of: dict[int, list[int]] = {}
-    for pi, fi in enumerate(feat_of_part):
-        if sc[pi]:
-            parts_of.setdefault(int(fi), []).append(pi)
-    em_part, em_tx, em_ty = [], [], []
-    for fi, pl in parts_of.items():
-        tx_lo, tx_hi, ty_lo, ty_hi = covers[fi]
-        for ty in range(ty_lo, ty_hi + 1):
-            for tx in range(tx_lo, tx_hi + 1):
-                for pi in pl:
-                    em_part.append(pi)
-                    em_tx.append(tx)
-                    em_ty.append(ty)
-    if not em_part:
-        return []
-    em_part = np.asarray(em_part, np.int64)
-    em_tx = np.asarray(em_tx, np.int64)
-    em_ty = np.asarray(em_ty, np.int64)
-    all_lens = sc[em_part]
+    # emissions ordered (feature, ty, tx, part): emission k of feature f
+    # is ((ty - ty_lo) * ntx + (tx - tx_lo)) * nparts + part
+    live_part = np.flatnonzero(sc > 0)
+    nparts = np.bincount(feat_of_part[live_part], minlength=len(covers))
+    ntx = covers[:, 1] - covers[:, 0] + 1
+    n_em = ntx * (covers[:, 3] - covers[:, 2] + 1) * nparts
+    em_f = np.repeat(np.arange(len(covers)), n_em)
+    k = np.arange(len(em_f)) - starts_of(n_em)[:-1][em_f]
+    tile = k // nparts[em_f]
+    em_part = live_part[starts_of(nparts)[:-1][em_f] + k % nparts[em_f]]
+    em_tx = covers[em_f, 0] + tile % ntx[em_f]
+    em_ty = covers[em_f, 2] + tile // ntx[em_f]
     # Bound peak memory: total rows = segments x covered tiles, and ONE
     # long feature spanning a wide bbox at high zoom (a 5k-segment ferry
     # track over 100x100 tiles) would materialize ~20 temporaries of 25M
     # rows in one go where the per-tile loop peaked at O(segments).
     # Emissions are independent through chain assembly, so process them
-    # in row-bounded chunks and stitch (fi, tx, ty) groups that straddle
-    # a chunk boundary back together afterwards.
-    if int(all_lens.sum()) > _CHUNK_ROWS:
-        bounds = [0]
-        acc = 0
-        for e, ln in enumerate(all_lens):
-            acc += int(ln)
-            if acc > _CHUNK_ROWS:
-                bounds.append(e + 1)
-                acc = 0
-        if bounds[-1] != len(em_part):
-            bounds.append(len(em_part))
-        merged: list = []
-        for s, e in zip(bounds[:-1], bounds[1:]):
-            part_out = _clip_lines_emissions(
-                seg_a, seg_b, sc, feat_of_part,
-                em_part[s:e], em_tx[s:e], em_ty[s:e], extent, buffer_px, n,
-            )
-            if merged and part_out and merged[-1][0] == part_out[0][0]:
-                merged[-1][1].extend(part_out[0][1])
-                part_out = part_out[1:]
-            merged.extend(part_out)
-        return merged
-    return _clip_lines_emissions(
-        seg_a, seg_b, sc, feat_of_part, em_part, em_tx, em_ty, extent, buffer_px, n
+    # in row-bounded chunks; rows are grouped after concatenation, which
+    # stitches (fi, tx, ty) groups straddling a chunk boundary.
+    cum = np.cumsum(sc[em_part])
+    total = int(cum[-1]) if len(cum) else 0
+    cuts = np.searchsorted(cum, np.arange(_CHUNK_ROWS, total, _CHUNK_ROWS)) + 1
+    bounds = np.unique(np.concatenate(([0], cuts, [len(em_part)])))
+    chunks = [
+        _clip_lines_emissions(
+            seg_a, seg_b, sc, feat_of_part,
+            em_part[s:e], em_tx[s:e], em_ty[s:e], extent, buffer_px, n,
+        )
+        for s, e in zip(bounds[:-1], bounds[1:])
+    ] or [_NO_CHAINS]
+    c_fi, c_tx, c_ty, chain_npts, pts = (np.concatenate(c) for c in zip(*chunks))
+    # chains are in (feature, ty, tx) order because emissions were: a
+    # row is each run of equal keys
+    new_row = np.ones(len(c_fi), bool)
+    new_row[1:] = (
+        (c_fi[1:] != c_fi[:-1]) | (c_tx[1:] != c_tx[:-1]) | (c_ty[1:] != c_ty[:-1])
     )
+    row_start = np.flatnonzero(new_row)
+    row_nchains = np.diff(np.append(row_start, len(c_fi)))
+    return (
+        c_fi[row_start], c_tx[row_start], c_ty[row_start],
+        row_nchains, chain_npts, pts,
+    )
+
+
+# per-chain buffers of an emission slice that yields nothing
+_NO_CHAINS = (
+    np.zeros(0, np.int64), np.zeros(0, np.int64), np.zeros(0, np.int64),
+    np.zeros(0, np.int64), np.zeros((0, 2), np.int64),
+)
 
 
 def _clip_lines_emissions(
     seg_a, seg_b, sc, feat_of_part, em_part, em_tx, em_ty, extent, buffer_px, n
 ):
-    """Row-wise half of _clip_lines_batched for one emission slice."""
-    seg_base = np.concatenate(([0], np.cumsum(sc)[:-1]))
+    """Row-wise half of _clip_lines_batched for one emission slice:
+    ``(chain_fi, chain_tx, chain_ty, chain_npts, pts)`` of its surviving
+    chains, in emission order."""
+    seg_base = starts_of(sc)[:-1]
     lens = sc[em_part]
     total = int(lens.sum())
-    em_row_start = np.concatenate(([0], np.cumsum(lens)[:-1]))
+    em_row_start = starts_of(lens)[:-1]
     gidx = np.repeat(seg_base[em_part], lens) + (
         np.arange(total) - np.repeat(em_row_start, lens)
     )
@@ -536,7 +543,7 @@ def _clip_lines_emissions(
     t1 = np.clip(tmax, 0.0, 1.0)
     ok = t0 < t1
     if not ok.any():
-        return []
+        return _NO_CHAINS
     first_row = np.zeros(total, bool)
     first_row[em_row_start] = True
     prev_ok = np.concatenate(([False], ok[:-1]))
@@ -551,7 +558,7 @@ def _clip_lines_emissions(
     startk = ~cont[keep]
     sk = startk.astype(np.int64)
     counts = 1 + sk
-    pos = np.concatenate(([0], np.cumsum(counts)[:-1]))
+    pos = starts_of(counts)[:-1]
     buf = np.empty((int(counts.sum()), 2), np.float64)
     buf[pos[startk]] = p0[startk]
     buf[pos + sk] = p1
@@ -586,28 +593,11 @@ def _clip_lines_emissions(
     keep_pt = first_pt | ~same_prev
     kept_per_chain = np.add.reduceat(keep_pt.astype(np.int64), chain_starts)
     live = (kept_per_chain >= 2) & ~edge_drop
-    if not live.any():
-        return []
-    # assemble rows grouped by (feature, ty, tx); chains are already in
-    # that order because emissions were
-    fi_of_chain = feat_of_part[em_part[chain_em]]
-    out = []
-    cur_key = None
-    cur_parts: list = []
-    for c in np.flatnonzero(live):
-        s = chain_starts[c]
-        e = s + chain_len[c]
-        pts_c = ip[s:e][keep_pt[s:e]].tolist()
-        key = (int(fi_of_chain[c]), int(em_tx[chain_em[c]]), int(em_ty[chain_em[c]]))
-        if key != cur_key:
-            if cur_parts:
-                out.append((cur_key, cur_parts))
-            cur_key = key
-            cur_parts = []
-        cur_parts.append(pts_c)
-    if cur_parts:
-        out.append((cur_key, cur_parts))
-    return out
+    live_em = chain_em[live]
+    return (
+        feat_of_part[em_part[live_em]], em_tx[live_em], em_ty[live_em],
+        kept_per_chain[live], ip[keep_pt & live[buf_chain]],
+    )
 
 
 def _dedupe_consecutive(ipts: np.ndarray) -> np.ndarray:
@@ -682,195 +672,204 @@ def clip_features(
         raise ValueError(f"need at least one zoom >= 0, got {z!r}")
     z_top = zs[-1]
 
-    def run(batches):
-        for b in batches:
-            rows = {
-                "tile_z": [], "tile_x": [], "tile_y": [],
-                "layer": [], "geom_type": [], "feature_id": [], "geom": [],
-            }
-            layers = b[layer_col].to_pylist()
-            gts = b[geom_type_col].to_pylist()
-            fids = b[feature_id_col].to_pylist()
-            # shared Arrow-native unnest (arrow_geom.feature_parts) with
-            # the lon/lat -> global-pixel projection applied to the whole
-            # batch's flat point block in ONE vectorized call; ring views
-            # below are zero-copy slices of the projected block
-            def project_block(flat):
-                px, py = proj(flat[:, 0], flat[:, 1], z_top, extent)
-                return np.column_stack([px, py])
+    def project_block(flat):
+        px, py = proj(flat[:, 0], flat[:, 1], z_top, extent)
+        return np.column_stack([px, py])
 
-            # LINESTRING features route to the whole-batch kernel
-            # (_clip_lines_batched): collectors for parts + bboxes
-            line_parts: list[np.ndarray] = []   # one (k,2) ring per part
-            line_part_feat: list[int] = []      # owning line-feature ordinal
-            line_meta: list[tuple] = []         # (layer, fid) per ordinal
-            line_bbox: list[tuple] = []         # (xmin, ymin, xmax, ymax)
+    def covers_at(bbox, zz):
+        """(F, 4) tx_lo/tx_hi/ty_lo/ty_hi of z_top-pixel bboxes at zoom
+        zz. Lower zooms reuse the z_top projection: dividing by a power
+        of two is exact in float64. Both ends clamp into [0, n):
+        geometry exactly on the world east/south edge has
+        floor(span/extent) == n, and an unclamped lo would empty the
+        range and drop it."""
+        scale = float(1 << (z_top - zz))
+        n = 1 << zz
+        covers = np.empty((len(bbox), 4), np.int64)
+        covers[:, 0] = np.clip(np.floor((bbox[:, 0] / scale - buffer_px) / extent), 0, n - 1)
+        covers[:, 1] = np.clip(np.floor((bbox[:, 2] / scale + buffer_px) / extent), 0, n - 1)
+        covers[:, 2] = np.clip(np.floor((bbox[:, 1] / scale - buffer_px) / extent), 0, n - 1)
+        covers[:, 3] = np.clip(np.floor((bbox[:, 3] / scale + buffer_px) / extent), 0, n - 1)
+        return covers
 
-            for (layer, gt, fid), raw_parts in zip(
-                zip(layers, gts, fids),
-                feature_parts(b[geom_col], np.float64, transform=project_block),
-            ):
-                # drop only ring-less parts; EMPTY rings keep their slot —
-                # filtering them would promote a polygon's first hole into
-                # exterior position when the exterior ring is empty/null
-                proj_parts = [part for part in raw_parts if len(part)]
-                if not any(len(r) for part in proj_parts for r in part):
-                    continue
-                allpts = np.concatenate([r for p in proj_parts for r in p if len(r)])
-                if not np.isfinite(allpts).all():
-                    # one corrupt coordinate (NaN/inf lon/lat or a
-                    # projection-domain blowup) must drop THIS feature,
-                    # not crash the task and kill a planet-scale job
-                    continue
-                x_min, y_min = allpts[:, 0].min(), allpts[:, 1].min()
-                x_max, y_max = allpts[:, 0].max(), allpts[:, 1].max()
-                if gt == GEOM_LINESTRING:
-                    fi = len(line_meta)
-                    line_meta.append((layer, fid))
-                    line_bbox.append((x_min, y_min, x_max, y_max))
-                    for part in proj_parts:
-                        line_parts.append(part[0])
-                        line_part_feat.append(fi)
-                    continue
-                for zz in zs:
-                    # lower zooms reuse the z_top projection: dividing by
-                    # a power of two is exact in float64
-                    scale = float(1 << (z_top - zz))
-                    n = 1 << zz
-                    zparts = (
-                        proj_parts
-                        if scale == 1.0
-                        else [[r / scale for r in part] for part in proj_parts]
-                    )
-                    # clamp BOTH ends into [0, n): geometry exactly on the
-                    # world east/south edge has floor(span/extent) == n, and
-                    # an unclamped lo would empty the range and drop it
-                    tx_lo = min(n - 1, max(0, int(math.floor((x_min / scale - buffer_px) / extent))))
-                    tx_hi = min(n - 1, max(0, int(math.floor((x_max / scale + buffer_px) / extent))))
-                    ty_lo = min(n - 1, max(0, int(math.floor((y_min / scale - buffer_px) / extent))))
-                    ty_hi = min(n - 1, max(0, int(math.floor((y_max / scale + buffer_px) / extent))))
-                    if gt == GEOM_POLYGON:
-                        # strip closing duplicates ONCE per feature+zoom —
-                        # inside the tile loops this identical work would
-                        # repeat for every covered tile (hundreds for a
-                        # large polygon at high zoom)
-                        poly_open_parts = [
-                            [
-                                ring[:-1]
-                                if len(ring) > 1 and np.array_equal(ring[0], ring[-1])
-                                else ring
-                                for ring in part
-                                if len(ring)
-                            ]
-                            for part in zparts
-                            if len(part) and len(part[0])
+    def point_polygon_rows(b, rows):
+        """Per-feature lane for the batch rows selected by the mask `rows`
+        (POINT and POLYGON; the exact polygon clipper is a per-ring
+        algorithm): (batch row, z, x, y, geom_type) per output row plus
+        the geometry, built from Python lists."""
+        idx = np.flatnonzero(rows)
+        gts = b[geom_type_col].take(idx).to_pylist()
+        keys, geoms = [], []
+        # shared Arrow-native unnest (arrow_geom.feature_parts) with the
+        # lon/lat -> global-pixel projection applied to the flat point
+        # block in ONE vectorized call; ring views below are zero-copy
+        # slices of the projected block
+        for j, gt, raw_parts in zip(
+            idx, gts, feature_parts(b[geom_col].take(idx), np.float64, transform=project_block)
+        ):
+            # drop only ring-less parts; EMPTY rings keep their slot —
+            # filtering them would promote a polygon's first hole into
+            # exterior position when the exterior ring is empty/null
+            proj_parts = [part for part in raw_parts if len(part)]
+            if not any(len(r) for part in proj_parts for r in part):
+                continue
+            allpts = np.concatenate([r for p in proj_parts for r in p if len(r)])
+            if not np.isfinite(allpts).all():
+                # one corrupt coordinate (NaN/inf lon/lat or a
+                # projection-domain blowup) must drop THIS feature, not
+                # crash the task and kill a planet-scale job
+                continue
+            bbox = np.concatenate([allpts.min(axis=0), allpts.max(axis=0)])[None]
+            for zz in zs:
+                scale = float(1 << (z_top - zz))
+                n = 1 << zz
+                zparts = (
+                    proj_parts
+                    if scale == 1.0
+                    else [[r / scale for r in part] for part in proj_parts]
+                )
+                tx_lo, tx_hi, ty_lo, ty_hi = covers_at(bbox, zz)[0].tolist()
+                if gt == GEOM_POLYGON:
+                    # strip closing duplicates ONCE per feature+zoom —
+                    # inside the tile loops this identical work would
+                    # repeat for every covered tile (hundreds for a large
+                    # polygon at high zoom)
+                    poly_open_parts = [
+                        [
+                            ring[:-1]
+                            if len(ring) > 1 and np.array_equal(ring[0], ring[-1])
+                            else ring
+                            for ring in part
+                            if len(ring)
                         ]
-                    for ty in range(ty_lo, ty_hi + 1):
-                        for tx in range(tx_lo, tx_hi + 1):
-                            x0, y0 = tx * extent - buffer_px, ty * extent - buffer_px
-                            x1, y1 = (tx + 1) * extent + buffer_px, (ty + 1) * extent + buffer_px
-                            ox, oy = float(tx * extent), float(ty * extent)
-                            # exact-tiling edge ownership (buffer_px == 0): the
-                            # high edge x1/y1 belongs to the NEXT tile (same
-                            # line is its local 0), except at the world edge
-                            # where there is no next tile — otherwise
-                            # boundary-lattice points/lines emit twice. With a
-                            # buffer, duplication in the overlap band is the
-                            # documented intent.
-                            open_hi_x = buffer_px == 0 and tx < n - 1
-                            open_hi_y = buffer_px == 0 and ty < n - 1
-                            out_parts = []
-                            if gt == GEOM_POINT:
-                                for part in zparts:
-                                    p = part[0]
-                                    m = (
-                                        (p[:, 0] >= x0)
-                                        & ((p[:, 0] < x1) if open_hi_x else (p[:, 0] <= x1))
-                                        & (p[:, 1] >= y0)
-                                        & ((p[:, 1] < y1) if open_hi_y else (p[:, 1] <= y1))
-                                    )
-                                    if m.any():
-                                        kept = np.rint(p[m] - (ox, oy)).astype(np.int64)
-                                        out_parts.extend([[pt.tolist()]] for pt in kept)
-                            elif gt == GEOM_POLYGON:
-                                for open_rings in poly_open_parts:
-                                    # exact multi-piece clip: disconnected
-                                    # pieces become separate parts, holes
-                                    # regroup by containment (see
-                                    # clip_polygon_exact — naive S-H
-                                    # double-winds concave splits)
-                                    for piece in clip_polygon_exact(open_rings, x0, y0, x1, y1):
-                                        rings = []
-                                        for k, r in enumerate(piece):
-                                            loc = _localize_ring(r, ox, oy)
-                                            if k == 0 and loc is None:
-                                                rings = None  # exterior gone
-                                                break
-                                            if loc is not None:
-                                                rings.append(loc)
-                                        if rings:
-                                            out_parts.append(rings)
-                            else:
-                                raise ValueError("Geometry type of UNKNOWN given.")
-                            if not out_parts:
-                                continue
-                            rows["tile_z"].append(zz)
-                            rows["tile_x"].append(tx)
-                            rows["tile_y"].append(ty)
-                            rows["layer"].append(layer)
-                            rows["geom_type"].append(gt)
-                            rows["feature_id"].append(fid)
-                            rows["geom"].append(out_parts)
+                        for part in zparts
+                        if len(part) and len(part[0])
+                    ]
+                for ty in range(ty_lo, ty_hi + 1):
+                    for tx in range(tx_lo, tx_hi + 1):
+                        x0, y0 = tx * extent - buffer_px, ty * extent - buffer_px
+                        x1, y1 = (tx + 1) * extent + buffer_px, (ty + 1) * extent + buffer_px
+                        ox, oy = float(tx * extent), float(ty * extent)
+                        # exact-tiling edge ownership (buffer_px == 0): the
+                        # high edge x1/y1 belongs to the NEXT tile (same
+                        # line is its local 0), except at the world edge
+                        # where there is no next tile — otherwise
+                        # boundary-lattice points emit twice. With a
+                        # buffer, duplication in the overlap band is the
+                        # documented intent.
+                        open_hi_x = buffer_px == 0 and tx < n - 1
+                        open_hi_y = buffer_px == 0 and ty < n - 1
+                        out_parts = []
+                        if gt == GEOM_POINT:
+                            for part in zparts:
+                                p = part[0]
+                                m = (
+                                    (p[:, 0] >= x0)
+                                    & ((p[:, 0] < x1) if open_hi_x else (p[:, 0] <= x1))
+                                    & (p[:, 1] >= y0)
+                                    & ((p[:, 1] < y1) if open_hi_y else (p[:, 1] <= y1))
+                                )
+                                if m.any():
+                                    kept = np.rint(p[m] - (ox, oy)).astype(np.int64)
+                                    out_parts.extend([[pt.tolist()]] for pt in kept)
+                        elif gt == GEOM_POLYGON:
+                            for open_rings in poly_open_parts:
+                                # exact multi-piece clip: disconnected
+                                # pieces become separate parts, holes
+                                # regroup by containment (see
+                                # clip_polygon_exact — naive S-H
+                                # double-winds concave splits)
+                                for piece in clip_polygon_exact(open_rings, x0, y0, x1, y1):
+                                    rings = []
+                                    for k, r in enumerate(piece):
+                                        loc = _localize_ring(r, ox, oy)
+                                        if k == 0 and loc is None:
+                                            rings = None  # exterior gone
+                                            break
+                                        if loc is not None:
+                                            rings.append(loc)
+                                    if rings:
+                                        out_parts.append(rings)
+                        else:
+                            raise ValueError("Geometry type of UNKNOWN given.")
+                        if out_parts:
+                            keys.append((j, zz, tx, ty, gt))
+                            geoms.append(out_parts)
+        keys = np.asarray(keys, np.int64).reshape(-1, 5)
+        return keys, pa.array(geoms, GEOM_INT64)
 
-            if line_parts:
-                # segment blocks built ONCE at z_top; lower zooms divide
-                # by a power of two (exact in float64), and bbox covers
-                # reuse the same clamp arithmetic as the per-feature path
-                sc = np.asarray([max(0, len(p) - 1) for p in line_parts], np.int64)
-                feat_of_part = np.asarray(line_part_feat, np.int64)
-                nonempty = [p for p in line_parts if len(p) >= 2]
-                seg_a0 = (
-                    np.concatenate([p[:-1] for p in nonempty])
-                    if nonempty else np.empty((0, 2))
-                )
-                seg_b0 = (
-                    np.concatenate([p[1:] for p in nonempty])
-                    if nonempty else np.empty((0, 2))
-                )
-                bbox = np.asarray(line_bbox, np.float64).reshape(-1, 4)
-                for zz in zs:
-                    scale = float(1 << (z_top - zz))
-                    n = 1 << zz
-                    sa = seg_a0 if scale == 1.0 else seg_a0 / scale
-                    sb = seg_b0 if scale == 1.0 else seg_b0 / scale
-                    covers = np.empty((len(bbox), 4), np.int64)
-                    covers[:, 0] = np.clip(np.floor((bbox[:, 0] / scale - buffer_px) / extent), 0, n - 1)
-                    covers[:, 1] = np.clip(np.floor((bbox[:, 2] / scale + buffer_px) / extent), 0, n - 1)
-                    covers[:, 2] = np.clip(np.floor((bbox[:, 1] / scale - buffer_px) / extent), 0, n - 1)
-                    covers[:, 3] = np.clip(np.floor((bbox[:, 3] / scale + buffer_px) / extent), 0, n - 1)
-                    for (fi, tx, ty), chains in _clip_lines_batched(
-                        sa, sb, sc, feat_of_part, covers, extent, buffer_px, n
-                    ):
-                        layer, fid = line_meta[fi]
-                        rows["tile_z"].append(zz)
-                        rows["tile_x"].append(tx)
-                        rows["tile_y"].append(ty)
-                        rows["layer"].append(layer)
-                        rows["geom_type"].append(GEOM_LINESTRING)
-                        rows["feature_id"].append(fid)
-                        rows["geom"].append([[c] for c in chains])
+    def line_rows(b, rows):
+        """Whole-batch LINESTRING lane for the batch rows selected by the
+        mask `rows`, on the column's offset/value buffers: (batch row,
+        z, x, y, geom_type) per output row plus the geometry column,
+        built by offset arithmetic."""
+        idx = np.flatnonzero(rows)
+        n_parts, n_rings, n_pts, flat = geom_buffers(b[geom_col].take(idx))
+        flat = project_block(flat)
+        ring_start = starts_of(n_pts)
+        part_ring = starts_of(n_rings)
+        feat_part = starts_of(n_parts)
+        f_lo = ring_start[part_ring[feat_part[:-1]]]
+        f_hi = ring_start[part_ring[feat_part[1:]]]
+        # per-feature point ranges are contiguous: a feature with no
+        # points, or any non-finite one (NaN/inf lon/lat or a
+        # projection-domain blowup), is dropped, not fatal to the task
+        n_bad = starts_of(~np.isfinite(flat).all(axis=1))
+        has_pts = f_hi > f_lo
+        ok = has_pts & (n_bad[f_hi] == n_bad[f_lo])
+        kept = idx[ok]
+        lo = np.minimum.reduceat(flat, f_lo[has_pts], axis=0)[ok[has_pts]]
+        hi = np.maximum.reduceat(flat, f_lo[has_pts], axis=0)[ok[has_pts]]
+        bbox = np.concatenate([lo, hi], axis=1)
+        # each ringed part of a kept feature clips its FIRST ring
+        part_f = np.repeat(np.arange(len(n_parts)), n_parts)
+        use = np.flatnonzero(ok[part_f] & (n_rings > 0))
+        r0 = part_ring[use]
+        sc = np.maximum(n_pts[r0] - 1, 0)
+        feat_of_part = (np.cumsum(ok) - 1)[part_f[use]]
+        seg = np.repeat(ring_start[r0], sc) + (
+            np.arange(int(sc.sum())) - np.repeat(starts_of(sc)[:-1], sc)
+        )
+        seg_a0, seg_b0 = flat[seg], flat[seg + 1]
+        keys, nchains, npts, pts = [], [], [], []
+        for zz in zs:
+            scale = float(1 << (z_top - zz))
+            sa = seg_a0 if scale == 1.0 else seg_a0 / scale
+            sb = seg_b0 if scale == 1.0 else seg_b0 / scale
+            fi, tx, ty, row_nchains, chain_npts, zpts = _clip_lines_batched(
+                sa, sb, sc, feat_of_part, covers_at(bbox, zz), extent, buffer_px, 1 << zz
+            )
+            keys.append(np.column_stack((
+                kept[fi], np.full(len(fi), zz), tx, ty, np.full(len(fi), GEOM_LINESTRING),
+            )))
+            nchains.append(row_nchains)
+            npts.append(chain_npts)
+            pts.append(zpts)
+        npts = np.concatenate(npts)
+        geom = geom_array(
+            np.concatenate(nchains), np.ones(len(npts), np.int64), npts, np.concatenate(pts)
+        )
+        return np.concatenate(keys).astype(np.int64), geom
+
+    def run(batches):
+        import pyarrow.compute as pc
+
+        for b in batches:
+            is_line = np.asarray(
+                pc.fill_null(pc.equal(b[geom_type_col], GEOM_LINESTRING), False)
+            )
+            # point/polygon rows first, then the line lane's rows
+            (k1, g1), (k2, g2) = point_polygon_rows(b, ~is_line), line_rows(b, is_line)
+            keys = np.concatenate([k1, k2])
             yield pa.record_batch(
                 {
-                    "tile_z": pa.array(rows["tile_z"], pa.int32()),
-                    "tile_x": pa.array(rows["tile_x"], pa.int32()),
-                    "tile_y": pa.array(rows["tile_y"], pa.int32()),
-                    "layer": pa.array(rows["layer"], pa.string()),
-                    "geom_type": pa.array(rows["geom_type"], pa.int32()),
-                    "feature_id": pa.array(rows["feature_id"], pa.int64()),
-                    "geom": pa.array(
-                        rows["geom"],
-                        pa.list_(pa.list_(pa.list_(pa.list_(pa.int64())))),
-                    ),
+                    "tile_z": pa.array(keys[:, 1], pa.int32()),
+                    "tile_x": pa.array(keys[:, 2], pa.int32()),
+                    "tile_y": pa.array(keys[:, 3], pa.int32()),
+                    "layer": b[layer_col].take(keys[:, 0]).cast(pa.string()),
+                    "geom_type": pa.array(keys[:, 4], pa.int32()),
+                    "feature_id": b[feature_id_col].take(keys[:, 0]).cast(pa.int64()),
+                    "geom": pa.concat_arrays([g1, g2]),
                 }
             )
 

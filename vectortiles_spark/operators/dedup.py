@@ -196,6 +196,11 @@ def minhash_signatures(
 
     def partial_mins(batches):
         for b in batches:
+            # a custom hasher may yield NULL: such a shingle takes no
+            # part in the minima (min() over the column ignored it too)
+            valid = pc.is_valid(b.column(b.schema.get_field_index("h31")))
+            if not pc.all(valid).as_py():
+                b = b.filter(valid)
             n = b.num_rows
             if n == 0:
                 continue

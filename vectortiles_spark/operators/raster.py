@@ -928,15 +928,17 @@ def overlay_areas(
         b_masks = masks_of(bpdf, "b")
         if not a_masks or not b_masks:
             return empty
-        # |A| x |B| AND-counts as ONE float32 matmul over the flattened
-        # masks (guide §4.2): products are 0/1 and counts <= w*h << 2^24,
-        # so float32 accumulation is integer-exact; the former per-pair
-        # Python loop paid ~5us of NumPy dispatch per pair (measured
-        # ~8s/tile at 1250x1250 — BLAS does the same tile in ~0.3s).
+        # |A| x |B| AND-counts as ONE matmul over the flattened masks
+        # (guide §4.2): products are 0/1 and counts <= w*h, so float32
+        # accumulation is integer-exact while w*h <= 2^24 and float64
+        # (exact to 2^53) takes larger grids; the former per-pair Python
+        # loop paid ~5us of NumPy dispatch per pair (measured ~8s/tile at
+        # 1250x1250 — BLAS does the same tile in ~0.3s).
         # np.nonzero iterates row-major, preserving the loop's
         # (a-order, then b-order) output row order exactly.
-        A = np.stack([m.ravel() for _, m in a_masks]).astype(np.float32)
-        B = np.stack([m.ravel() for _, m in b_masks]).astype(np.float32)
+        dt = np.float32 if w * h <= 1 << 24 else np.float64
+        A = np.stack([m.ravel() for _, m in a_masks]).astype(dt)
+        B = np.stack([m.ravel() for _, m in b_masks]).astype(dt)
         counts = A @ B.T
         ia, ib = np.nonzero(counts)
         if len(ia) == 0:

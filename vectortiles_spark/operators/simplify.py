@@ -16,14 +16,17 @@ integers) with classic Douglas-Peucker before command-stream encoding:
   (closure included — the MVT minimum, LineTo count >= 2) are dropped,
   and a part whose exterior ring collapses is dropped whole (consistent
   with the decoder's degenerate-ring rejection, Internal.hs:202-206);
-* points pass through untouched.
+* points are only rounded to the grid (consecutive duplicates collapse).
 
-Scale shape: a per-row NumPy kernel inside ``mapInArrow`` — embarrassingly
-parallel, no shuffle, runs wherever the feature rows already are (slot it
-between the geometry source and ``geom_features``). The stack loop splits
-at most once per SURVIVING vertex; each split's distance scan is one
-vectorized pass, so a ring that simplifies to k points costs O(k) NumPy
-calls over shrinking slices, not O(n^2) Python.
+Scale shape: one whole-batch NumPy kernel inside ``mapInArrow``
+(simplify_buffers) — embarrassingly parallel, no shuffle, runs wherever
+the feature rows already are (slot it between the geometry source and
+``geom_features``). The geometry stays in the column's offset/value
+buffers: one keep-mask over the batch's flat points, Douglas-Peucker for
+every line and ring of the batch in one level-synchronous pass
+(dp_keep_mask_batch), the drop rules as masks, and the output offsets
+rebuilt from the surviving counts. simplify_parts / simplify_ring /
+dp_keep_mask are the scalar oracles it is tested against.
 """
 
 from __future__ import annotations
@@ -33,7 +36,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from ..mvt.geometry import GEOM_LINESTRING, GEOM_POINT, GEOM_POLYGON
-from .arrow_geom import feature_parts
+from .arrow_geom import geom_array, geom_buffers, starts_of
 from .clip import _rot
 
 
@@ -202,6 +205,72 @@ def simplify_parts(geom_type: int, parts: list | None, tol: float) -> list:
     raise ValueError("Geometry type of UNKNOWN given.")
 
 
+def simplify_buffers(gt, tol, n_parts, n_rings, n_pts, flat):
+    """Batch form of simplify_parts over one column's geom_buffers: `gt`
+    and `tol` give each feature's geometry type and tolerance; returns
+    the simplified int64 geometry column. One keep-mask over the flat
+    points (round + consecutive-dedupe, then dp_keep_mask_batch for every
+    line and ring) and the drop rules as masks over rings and parts; the
+    output offsets are the surviving counts."""
+    part_f = np.repeat(np.arange(len(n_parts)), n_parts)
+    ring_p = np.repeat(np.arange(len(n_rings)), n_rings)
+    pt_ring = np.repeat(np.arange(len(n_pts)), n_pts)
+    part_ring = starts_of(n_rings)
+    ring_gt = gt[part_f[ring_p]]
+    # a line part keeps only its first ring
+    enter = (ring_gt != GEOM_LINESTRING) | (np.arange(len(ring_p)) == part_ring[ring_p])
+    # _to_int_pts per ring: round (never truncate), collapse consecutive
+    # duplicates; each ring's first point always stays
+    ip = np.rint(flat).astype(np.int64)
+    keep = np.ones(len(ip), bool)
+    keep[1:] = np.any(ip[1:] != ip[:-1], axis=1)
+    keep[starts_of(n_pts)[:-1][n_pts > 0]] = True
+    keep &= enter[pt_ring]
+    # Douglas-Peucker over every line and polygon ring at once
+    dp_ring = enter & (ring_gt != GEOM_POINT)
+    idx = np.flatnonzero(keep & dp_ring[pt_ring])
+    dlens = np.bincount(pt_ring[idx], minlength=len(n_pts))[dp_ring]
+    t2 = tol[part_f[ring_p]][dp_ring] ** 2
+    dp = dp_keep_mask_batch(ip[idx].astype(np.float64), starts_of(dlens)[:-1], dlens, t2)
+    keep[idx[~dp]] = False
+    kcount = np.bincount(pt_ring[keep], minlength=len(n_pts))
+    # twice the integer shoelace area of each polygon ring over its kept
+    # points minus the closing one (simplify_ring's zero-area rule; int64
+    # wraps the same way np.dot does)
+    poly = enter & (ring_gt == GEOM_POLYGON)
+    pidx = np.flatnonzero(keep & poly[pt_ring])
+    K = ip[pidx]
+    m = kcount[pt_ring[pidx]]
+    pstart = starts_of(np.where(poly, kcount, 0))
+    i = np.arange(len(K))
+    j = i - pstart[pt_ring[pidx]]
+    nxt = np.where(j <= m - 3, i + 1, i - j)
+    cross = K[:, 0] * K[nxt, 1] - K[:, 1] * K[nxt, 0]
+    cross[j == m - 1] = 0
+    csum = starts_of(cross)
+    area2 = csum[pstart[1:]] - csum[pstart[:-1]]
+    # drop rules: a line needs 2 points, a ring 4 and a non-zero area; a
+    # part whose exterior (first ring) drops, or that has no ring, goes
+    # whole; points pass through with every part and ring
+    ring_ok = enter & np.where(
+        ring_gt == GEOM_POINT,
+        True,
+        np.where(ring_gt == GEOM_LINESTRING, kcount >= 2, (kcount >= 4) & (area2 != 0)),
+    )
+    ring0_ok = np.zeros(len(n_rings), bool)
+    has = n_rings > 0
+    ring0_ok[has] = ring_ok[part_ring[:-1][has]]
+    part_ok = (gt[part_f] == GEOM_POINT) | ring0_ok
+    ring_keep = ring_ok & part_ok[ring_p]
+    keep &= ring_keep[pt_ring]
+    return geom_array(
+        np.bincount(part_f[part_ok], minlength=len(n_parts)),
+        np.bincount(ring_p[ring_keep], minlength=len(n_rings))[part_ok],
+        kcount[ring_keep],
+        ip[keep],
+    )
+
+
 def simplify_geoms(
     df: DataFrame,
     tolerance: float,
@@ -233,122 +302,17 @@ def simplify_geoms(
 
     def run(batches):
         for b in batches:
-            gts = b[geom_type_col].to_pylist()
+            gt = np.asarray(b[geom_type_col].to_numpy(zero_copy_only=False))
+            if not np.isin(gt, (GEOM_POINT, GEOM_LINESTRING, GEOM_POLYGON)).all():
+                raise ValueError("Geometry type of UNKNOWN given.")
+            tol = np.full(len(gt), float(tolerance))
             if tolerance_by_zoom:
-                tols = [
-                    tolerance_by_zoom.get(z, tolerance)
-                    for z in b[zoom_col].to_pylist()
-                ]
-            else:
-                tols = None
-            # shared Arrow-native unnest (arrow_geom.feature_parts): each
-            # ring reaches the kernels as a zero-copy NumPy view.
-            # LINESTRING rows batch through dp_keep_mask_batch (all rings
-            # of the batch in one level-synchronous DP — the per-ring
-            # stack kernel's ~20 dispatches/interval dominated the whole
-            # vector pipeline); other types keep the scalar path.
-            new: list = [None] * len(gts)
-            ring_feat: list[int] = []
-            ring_views: list[np.ndarray] = []
-            ring_closed: list[bool] = []
-            # polygon structure: fi -> list of parts, each part a list of
-            # ring SLOTS (batch index, or None for empty rings that are
-            # degenerate by definition but must keep their position so an
-            # empty exterior still vetoes the part)
-            poly_struct: dict[int, list[list]] = {}
-            for fi, (gt, parts) in enumerate(
-                zip(gts, feature_parts(b[geom_col], np.float64))
-            ):
-                if gt == GEOM_LINESTRING:
-                    new[fi] = []
-                    for part in parts or []:
-                        if len(part) == 0 or len(part[0]) == 0:
-                            continue
-                        ring_feat.append(fi)
-                        ring_closed.append(False)
-                        ring_views.append(
-                            np.asarray(part[0], np.float64).reshape(-1, 2)
-                        )
-                elif gt == GEOM_POLYGON:
-                    struct = []
-                    for part in parts or []:
-                        slots = []
-                        for r in part:
-                            if len(r) == 0:
-                                slots.append(None)
-                            else:
-                                slots.append(len(ring_views))
-                                ring_feat.append(fi)
-                                ring_closed.append(True)
-                                ring_views.append(
-                                    np.asarray(r, np.float64).reshape(-1, 2)
-                                )
-                        struct.append(slots)
-                    poly_struct[fi] = struct
-                else:
-                    new[fi] = simplify_parts(
-                        gt, parts, tolerance if tols is None else tols[fi]
-                    )
-            if ring_views:
-                R = np.concatenate(ring_views)
-                rlens = np.asarray([len(r) for r in ring_views], np.int64)
-                rstarts = np.concatenate(([0], np.cumsum(rlens)[:-1]))
-                # round + consecutive-dedupe for ALL rings at once
-                # (_to_int_pts semantics, vectorized)
-                ip = np.rint(R).astype(np.int64)
-                firstflag = np.zeros(len(ip), bool)
-                firstflag[rstarts] = True
-                same = np.concatenate(
-                    ([False], np.all(ip[1:] == ip[:-1], axis=1))
-                )
-                keep_pt = firstflag | ~same
-                dlens = np.add.reduceat(keep_pt.astype(np.int64), rstarts)
-                D = ip[keep_pt]
-                dstarts = np.concatenate(([0], np.cumsum(dlens)[:-1]))
-                if tols is None:
-                    t2 = np.full(len(ring_views), float(tolerance) ** 2)
-                else:
-                    t2 = np.asarray([float(tols[f]) ** 2 for f in ring_feat])
-                mask = dp_keep_mask_batch(D.astype(np.float64), dstarts, dlens, t2)
-
-                def ring_out(ri):
-                    """simplify_ring's drop rules on the batch results."""
-                    s = dstarts[ri]
-                    e = s + dlens[ri]
-                    kept = D[s:e][mask[s:e]]
-                    if ring_closed[ri]:
-                        if len(kept) < 4:
-                            return None
-                        x, y = kept[:-1, 0], kept[:-1, 1]
-                        if np.dot(x, _rot(y)) - np.dot(y, _rot(x)) == 0:
-                            return None  # zero area corrupts sign grouping
-                    elif len(kept) < 2:
-                        return None
-                    return kept.tolist()
-
-                for ri in range(len(ring_views)):
-                    if not ring_closed[ri]:
-                        line = ring_out(ri)
-                        if line is not None:
-                            new[ring_feat[ri]].append([line])
-                for fi, struct in poly_struct.items():
-                    out_parts = []
-                    for slots in struct:
-                        rings = [None if ri is None else ring_out(ri) for ri in slots]
-                        if not rings or rings[0] is None:
-                            continue  # exterior collapsed: drop the part
-                        out_parts.append([r for r in rings if r is not None])
-                    new[fi] = out_parts
-            for fi in poly_struct:
-                if new[fi] is None:  # batch had no non-empty rings at all
-                    new[fi] = []
-            cols = {}
-            for name in b.schema.names:
-                cols[name] = (
-                    pa.array(new, type=b.schema.field(geom_col).type)
-                    if name == geom_col
-                    else b[name]
-                )
+                zooms = b[zoom_col].to_numpy(zero_copy_only=False)
+                for z, t in tolerance_by_zoom.items():
+                    tol[zooms == z] = t
+            geom = simplify_buffers(gt, tol, *geom_buffers(b[geom_col]))
+            cols = {name: b[name] for name in b.schema.names}
+            cols[geom_col] = geom.cast(b.schema.field(geom_col).type)
             yield pa.record_batch(cols)
 
     from ._fuse import compose, tag, tagged

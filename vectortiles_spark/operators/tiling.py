@@ -38,7 +38,17 @@ from pyspark.sql import functions as F
 
 from ..functions.tiles import tile_px, tile_py, tile_x, tile_y, zigzag
 from ..mvt import codec
+from ..mvt.geometry import (
+    GEOM_LINESTRING,
+    GEOM_POINT,
+    GEOM_POLYGON,
+    PART_LINE,
+    PART_POINT,
+    PART_RING,
+    parts_to_streams,
+)
 from ..session import python_stage_partitions
+from .arrow_geom import geom_buffers, starts_of
 
 TILE_SCHEMA = "tile_z int, tile_x int, tile_y int, mvt binary, n_features long, n_layers int"
 
@@ -105,6 +115,67 @@ def point_features(
 GEOM_NESTED_T = "array<array<array<array<int>>>>"  # parts x rings x points x 2
 
 
+def geom_streams(gt, n_parts, n_rings, n_pts, pts):
+    """MVT command streams of a batch of nested-array geometries in
+    offsets form (arrow_geom.geom_buffers; `pts` int64): ``(values
+    uint32, offsets int64)`` per feature, through
+    geometry.parts_to_streams. Parts the MVT layout cannot carry are
+    dropped first, and a feature left with nothing gets an empty stream
+    (the sink drops it — an empty feature would make the tile
+    undecodable, Internal.hs:296):
+
+    * a point feature is ONE multipoint of all its points;
+    * a line keeps the first ring of each part with >= 2 points
+      (MoveTo + LineTo >= 1);
+    * a polygon keeps the parts whose exterior (ring 0) has >= 4 points
+      (closed, LineTo count >= 2) and, in them, the rings with >= 4
+      points. A degenerate exterior drops its whole part: keeping its
+      holes would promote a CCW hole to ring 0, and decode would then
+      attach it to the PREVIOUS polygon (negative rings group with the
+      preceding exterior, Internal.hs:202-206) — silently wrong geometry.
+    """
+    gt = np.asarray(gt)
+    if not np.isin(gt, (GEOM_POINT, GEOM_LINESTRING, GEOM_POLYGON)).all():
+        raise ValueError("Geometry type of UNKNOWN given.")
+    part_f = np.repeat(np.arange(len(n_parts)), n_parts)
+    ring_p = np.repeat(np.arange(len(n_rings)), n_rings)
+    ring_start = starts_of(n_pts)
+    part_ring = starts_of(n_rings)
+    feat_part = starts_of(n_parts)
+    # point features: the feature's whole (contiguous) point range
+    f_lo = ring_start[part_ring[feat_part[:-1]]]
+    f_n = ring_start[part_ring[feat_part[1:]]] - f_lo
+    pt_f = np.flatnonzero((gt == GEOM_POINT) & (f_n > 0))
+    # first-ring size per part (0 for a part without rings)
+    ring0_n = np.zeros(len(n_rings), np.int64)
+    has = n_rings > 0
+    ring0_n[has] = n_pts[part_ring[:-1][has]]
+    part_gt = gt[part_f]
+    line_p = np.flatnonzero((part_gt == GEOM_LINESTRING) & (ring0_n >= 2))
+    ring_f = part_f[ring_p]
+    poly_r = np.flatnonzero(
+        (gt[ring_f] == GEOM_POLYGON) & (ring0_n[ring_p] >= 4) & (n_pts >= 4)
+    )
+    start = np.concatenate(
+        (f_lo[pt_f], ring_start[part_ring[line_p]], ring_start[poly_r])
+    )
+    size = np.concatenate((f_n[pt_f], ring0_n[line_p], n_pts[poly_r] - 1))
+    kind = np.concatenate((
+        np.full(len(pt_f), PART_POINT), np.full(len(line_p), PART_LINE),
+        np.full(len(poly_r), PART_RING),
+    ))
+    feat = np.concatenate((pt_f, part_f[line_p], ring_f[poly_r]))
+    # every part starts at a distinct flat position, in feature order
+    order = np.argsort(start, kind="stable")
+    start, size, kind, feat = start[order], size[order], kind[order], feat[order]
+    idx = np.repeat(start, size) + (
+        np.arange(int(size.sum())) - np.repeat(starts_of(size)[:-1], size)
+    )
+    return parts_to_streams(
+        pts[idx], size, kind, np.bincount(feat, minlength=len(n_parts))
+    )
+
+
 def geom_features(
     df: DataFrame,
     layer_col: str = "layer",
@@ -117,13 +188,13 @@ def geom_features(
     nested-array geometry (parts x rings x points x [x, y], tile-local ints;
     for points/lines the rings level has one entry) become canonical
     feature rows with MVT command streams (cursor semantics + winding per
-    the reference, via the NumPy kernel in a mapInArrow batch).
+    the reference). Each mapInArrow batch is encoded from the geometry
+    column's offset/value buffers by geom_streams — one vectorized pass,
+    the output ``geom_cmds`` list built from the same offsets.
 
     This is the bring-your-own-geometry door next to point_features (pure
     Column) and raster_to_features (contour tracing)."""
     import pyarrow as pa
-
-    from ..mvt.geometry import GEOM_LINESTRING, GEOM_POINT, GEOM_POLYGON, geom_to_stream
 
     meta = meta or {}
     base = df.select(
@@ -140,54 +211,21 @@ def geom_features(
     ) + ", geom_cmds array<bigint>"
 
     def encode(batches):
-        from .arrow_geom import feature_parts
-
         for b in batches:
-            gts = b["geom_type"].to_pylist()
-            # shared Arrow-native unnest (arrow_geom.feature_parts); every
-            # ring below is a zero-copy view into one int64 block
-            streams = []
-            for gt, parts in zip(gts, feature_parts(b["geom"], np.int64)):
-                if gt == GEOM_POINT:
-                    all_rings = [r for part in parts for r in part if len(r)]
-                    g = (
-                        np.concatenate(all_rings)
-                        if all_rings
-                        else np.empty((0, 2), dtype=np.int64)
-                    )
-                    degenerate = len(g) == 0
-                elif gt == GEOM_LINESTRING:
-                    # a valid line part needs >= 2 points (MoveTo + LineTo>=1)
-                    g = [
-                        part[0]
-                        for part in parts
-                        if len(part) and len(part[0]) >= 2
-                    ]
-                    degenerate = not g
-                elif gt == GEOM_POLYGON:
-                    # a valid ring needs >= 4 points (closed, LineTo count >= 2).
-                    # If the EXTERIOR (ring 0) is degenerate the whole part
-                    # must go: keeping its holes would promote a CCW hole to
-                    # ring 0, and decode would then attach it to the PREVIOUS
-                    # polygon (negative rings group with the preceding
-                    # exterior, Internal.hs:202-206) — silently wrong geometry
-                    g = [
-                        [r for r in part if len(r) >= 4]
-                        for part in parts
-                        if len(part) and len(part[0]) >= 4
-                    ]
-                    g = [p for p in g if p]
-                    degenerate = not g
-                else:
-                    raise ValueError("Geometry type of UNKNOWN given.")
-                if degenerate:
-                    # empty stream -> dropped by the sink (an empty feature
-                    # would make the tile undecodable, Internal.hs:296)
-                    streams.append([])
-                    continue
-                streams.append(geom_to_stream(gt, g).astype(np.int64).tolist())
+            n_parts, n_rings, n_pts, pts = geom_buffers(b["geom"], np.int64)
+            # the declared geometry is int-nested: the fused path may hand
+            # over bigint values, so replicate the JVM cast's int32
+            # two's-complement narrowing (fused and unfused plans stay
+            # value-identical even for out-of-range, already-corrupt
+            # coordinates); a no-op on int32 input
+            pts = pts.astype(np.int32).astype(np.int64)
+            vals, offs = geom_streams(
+                b["geom_type"].to_numpy(zero_copy_only=False), n_parts, n_rings, n_pts, pts
+            )
             cols = {f.name: b[f.name] for f in out_fields}
-            cols["geom_cmds"] = pa.array(streams, pa.list_(pa.int64()))
+            cols["geom_cmds"] = pa.ListArray.from_arrays(
+                pa.array(offs, pa.int32()), pa.array(vals.astype(np.int64))
+            )
             yield pa.record_batch(cols)
 
     from ._fuse import compose, tag, tagged
@@ -204,28 +242,11 @@ def geom_features(
     if up is not None and geom_only_diff:
         # upstream is a fusable mapInArrow AND this call's select is an
         # identity projection (default column names, no meta, canonical
-        # types) up to the geom cast: compose the kernels over the same
-        # parent instead of stacking another Python pass. The clip/
-        # simplify chain emits bigint-nested geometry while the declared
-        # input contract is int-nested; replicate the JVM cast's
-        # two's-complement narrowing with an unsafe Arrow cast so fused
-        # and unfused plans stay value-identical even for out-of-range
-        # (already-corrupt) coordinates.
+        # types) up to the geom cast, which encode's narrowing replicates:
+        # compose the kernels over the same parent instead of stacking
+        # another Python pass.
         parent, prev = up
-        if base_sig != df_sig:
-            import pyarrow.compute as pc
-
-            geom_t = pa.list_(pa.list_(pa.list_(pa.list_(pa.int32()))))
-
-            def narrowed(batches, _prev=prev):
-                for b in _prev(batches):
-                    i = b.schema.get_field_index("geom")
-                    col = pc.cast(b.column(i), geom_t, safe=False)
-                    yield b.set_column(i, pa.field("geom", geom_t), col)
-
-            fused = compose(narrowed, encode)
-        else:
-            fused = compose(prev, encode)
+        fused = compose(prev, encode)
         return tag(parent.mapInArrow(fused, out_schema), parent, fused)
     return base.mapInArrow(encode, out_schema)
 
